@@ -9,12 +9,15 @@ package graft
   * (isFinalPlan=false), which is exactly the plan the optimizer
   * committed to before runtime re-planning.
   *
-  * Usage: runMain graft.PlanDump <sfDir> <outDir> [suffix]
-  * SPARK_GRAFT_ONLY=a,b,c restricts to named queries.
+  * Usage: runMain graft.PlanDump <sfDir> <outDir> [suffix] [serve]
+  * SPARK_GRAFT_ONLY=a,b,c restricts to named queries. With `serve`, the
+  * dump is instead the serving reads of the store `etl_ingest_pipeline`
+  * ingests (`serve_<read>_<suffix>.txt`), each EXECUTED first so the file
+  * shows the final adaptive plan the read ran.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: PlanDump <sfDir> <outDir> [suffix]")
+    require(args.length >= 2, "usage: PlanDump <sfDir> <outDir> [suffix] [serve]")
     val sfDir = args(0)
     val outDir = java.nio.file.Paths.get(args(1))
     val suffix = if (args.length > 2) args(2) else "before"
@@ -24,9 +27,8 @@ object PlanDump {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val selected = only.fold(SparkEntry.queries)(
       names => SparkEntry.queries.filter(kv => names.contains(kv._1)))
-    selected.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+    def dump(name: String, df: => org.apache.spark.sql.DataFrame): Unit =
       try {
-        val df = fn(spark, sfDir)
         val plan = df.queryExecution.explainString(
           org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
         java.nio.file.Files.write(
@@ -36,7 +38,17 @@ object PlanDump {
       } catch { case e: Throwable =>
         System.err.println(s"[plandump] $name failed: ${e.getMessage}")
       }
-    }
+    if (args.lift(3).contains("serve")) {
+      val store = graft.probes.EtlProbes.ingestPipelineStore(spark, sfDir)
+      val id = store.listDocuments(0, 1).head().getLong(0)
+      def ran(df: org.apache.spark.sql.DataFrame) = { df.collect(); df }
+      dump("serve_get_document", ran(store.getDocument(id)))
+      dump("serve_get_chunks", ran(store.getChunks(id, Some(0), Some(1))))
+      dump("serve_get_charts", ran(store.getCharts(id)))
+      dump("serve_list_documents", ran(store.listDocuments(0, 10)))
+      dump("serve_list_documents_after", ran(store.listDocumentsAfter(id, 10)))
+    } else
+      selected.toSeq.sortBy(_._1).foreach { case (name, fn) => dump(name, fn(spark, sfDir)) }
     spark.stop()
   }
 }

@@ -25,6 +25,36 @@ object EtlProbes {
 
   private def scratchDir(): String = Probe.scratchDir("graft-etl-probe")
 
+  /** The store behind `etl_ingest_pipeline`: its synthesized documents
+    * ingested through [[IngestPipeline.ingestBinary]] into a fresh
+    * scratch root, served by a [[DocumentStore]]. Shared with
+    * [[graft.PlanDump]]'s serving-read dump.
+    */
+  private[graft] def ingestPipelineStore(s: org.apache.spark.sql.SparkSession,
+                                         d: String): DocumentStore = {
+    // binary payloads with a heading + table marker so every stage of the
+    // parse (headings, text blocks, table elements) is exercised;
+    // doc_id < 50 (not limit) so the input set is order-independent
+    val bin = Tables.load(s, d, "documents").filter(col("doc_id") < 50)
+      .select(
+        format_string("memory://doc_%d.pdf", col("doc_id")).as("path"),
+        encode(concat(
+          lit("Section heading:\n"), col("text"),
+          lit("\nTABLE: totals by source\n")), "utf-8").as("content"))
+    // unique per-run scratch root: a fixed path would let concurrent
+    // probe runs delete each other's live stores mid-write. The returned
+    // DataFrame reads from it lazily, so cleanup is deferred to JVM exit.
+    val root = scratchDir()
+    val tables = new TableStore(s, s"$root/tables")
+    val objects = new ObjectStore(s, s"$root/bucket")
+    // ingest sub-phases flow into the bench's phases map; the remaining
+    // time of this probe (total − phases) is the read-back listing
+    new IngestPipeline(s, tables, objects, ProcessingConfig(),
+      onPhase = PhaseTimer.record("etl_ingest_pipeline", _, _))
+      .ingestBinary(bin, fixedNow)
+    new DocumentStore(s, tables, objects)
+  }
+
   val all: Seq[Probe] = Seq(
 
     // E1→E2→E4→E7→S10→E5→S11→S12 end-to-end, then the §2.12 listing.
@@ -44,28 +74,7 @@ object EtlProbes {
         "',\"extraction_date\":\"2026-01-15 08:30:00\",\"content_sha\":\"' || sha256(content) || '\"}' AS metainfo, " +
         "1 AS n_charts FROM sel ORDER BY filename"
     ) { (s, d) =>
-      import s.implicits._
-      // binary payloads with a heading + table marker so every stage of the
-      // parse (headings, text blocks, table elements) is exercised;
-      // doc_id < 50 (not limit) so the input set is order-independent
-      val bin = Tables.load(s, d, "documents").filter(col("doc_id") < 50)
-        .select(
-          format_string("memory://doc_%d.pdf", col("doc_id")).as("path"),
-          encode(concat(
-            lit("Section heading:\n"), col("text"),
-            lit("\nTABLE: totals by source\n")), "utf-8").as("content"))
-      // unique per-run scratch root: a fixed path would let concurrent
-      // probe runs delete each other's live stores mid-write. The returned
-      // DataFrame reads from it lazily, so cleanup is deferred to JVM exit.
-      val root = scratchDir()
-      val tables = new TableStore(s, s"$root/tables")
-      val objects = new ObjectStore(s, s"$root/bucket")
-      // ingest sub-phases flow into the bench's phases map; the remaining
-      // time of this probe (total − phases) is the read-back listing
-      new IngestPipeline(s, tables, objects, ProcessingConfig(),
-        onPhase = PhaseTimer.record("etl_ingest_pipeline", _, _))
-        .ingestBinary(bin, fixedNow)
-      val store = new DocumentStore(s, tables, objects)
+      val store = ingestPipelineStore(s, d)
       // listing joined with per-doc chart counts + rendered PNG bytes so
       // the probe output witnesses the whole E5/E6/S11 path too
       val chartStats = store.charts.groupBy("document_id")

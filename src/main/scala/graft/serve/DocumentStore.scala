@@ -25,7 +25,12 @@ import graft.store.{ObjectStore, TableStore}
   * scan (predicate pushdown does the PK "index lookup"); the nested detail
   * query re-nests children with sort_array(collect_list(struct(...))) —
   * the app-side `sorted(...)` at repository.py:66 moved into the engine.
-  * The one-row document side broadcasts automatically.
+  * A single-document read is bounded by ONE document's rows (its row, its
+  * chunks, its charts — never a corpus), so it reads them as one
+  * partition ([[onePartition]]). Over a single-partition child the
+  * planner's own `orderBy` and the nesting `groupBy` need no exchange and
+  * the joins hash locally instead of broadcasting: each such read runs as
+  * exactly one Spark job.
   */
 final class DocumentStore(
     spark: SparkSession,
@@ -97,8 +102,17 @@ final class DocumentStore(
     */
   private def prunedEq(table: String, ddl: String,
                        column: String, v: Long): DataFrame =
-    if (tables.exists(table)) tables.readRange(table, column, v, v)
-    else emptyDf(ddl)
+    onePartition(
+      if (tables.exists(table)) tables.readRange(table, column, v, v)
+      else emptyDf(ddl))
+
+  /** One document's rows as ONE partition — only ever applied to a read
+    * keyed by a single document, so the partition holds that document's
+    * rows and never grows with the corpus. A narrow coalesce: no shuffle,
+    * and its single-partition output satisfies every distribution the
+    * sorts, aggregates and joins above it require.
+    */
+  private def onePartition(df: DataFrame): DataFrame = df.coalesce(1)
 
   /** One document's chunks as a two-tier pruned read: the doc_bucket
     * conjunct prunes to 1-of-N hive partition DIRECTORIES from the
@@ -112,8 +126,8 @@ final class DocumentStore(
     else {
       val b = graft.pipeline.IngestPipeline
         .chunkBucketScalar(documentId, chunkBuckets)
-      tables.readRangeAll("document_chunks",
-        Seq(("doc_bucket", b, b), ("document_id", documentId, documentId)))
+      onePartition(tables.readRangeAll("document_chunks",
+        Seq(("doc_bucket", b, b), ("document_id", documentId, documentId))))
     }
 
   /** S6+P1 — paginated listing, defaults per base.py:31. */
@@ -177,7 +191,10 @@ final class DocumentStore(
       .orderBy("id")
 
   /** S7+J1+J2+O2 — one document with ordered nested chunks and charts
-    * (repository.py:45-80).
+    * (repository.py:45-80). All three inputs are single-partition reads,
+    * so the `shuffle_hash` hints make both joins local hash joins: the
+    * size-based default would broadcast the one-row sides, and every
+    * broadcast is a Spark job of its own.
     */
   def getDocument(id: Long): DataFrame = {
     val doc = prunedEq("documents", DocDdl, "id", id)
@@ -192,8 +209,10 @@ final class DocumentStore(
         col("id").as("chart_id"), col("info"), col("image_path"),
         col("created_at"))).as("charts"))
     doc
-      .join(nestedChunks, col("id") === nestedChunks("document_id"), "left_outer")
-      .join(nestedCharts, col("id") === nestedCharts("document_id"), "left_outer")
+      .join(nestedChunks.hint("shuffle_hash"),
+        col("id") === nestedChunks("document_id"), "left_outer")
+      .join(nestedCharts.hint("shuffle_hash"),
+        col("id") === nestedCharts("document_id"), "left_outer")
       .select(doc("id"), col("filename"), col("total_chunks"), col("metainfo"),
         doc("created_at"), col("updated_at"),
         coalesce(col("chunks"), array()).as("chunks"),
@@ -228,7 +247,7 @@ final class DocumentStore(
     // ever exist (the defect state Audit.chart_ids_duplicated watches
     // for) and 404 a chart that is actually present. Both conjuncts are
     // manifest columns, so the read prunes to the files straddling BOTH
-    val rows = (if (tables.exists("chart_data"))
+    val rows = onePartition(if (tables.exists("chart_data"))
         tables.readRangeAll("chart_data", Seq(
           ("id", chartId, chartId), ("document_id", documentId, documentId)))
       else emptyDf(ChartDdl)).limit(1).collect()
@@ -304,8 +323,8 @@ final class DocumentStore(
 
   def deleteChart(documentId: Long, chartId: Long): Boolean = {
     val owned = tables.exists("chart_data") &&
-      tables.readRangeAll("chart_data", Seq(
-        ("id", chartId, chartId), ("document_id", documentId, documentId)))
+      onePartition(tables.readRangeAll("chart_data", Seq(
+        ("id", chartId, chartId), ("document_id", documentId, documentId))))
         .limit(1).collect().nonEmpty
     if (owned) {
       tables.deleteWhere("chart_data",

@@ -1,12 +1,15 @@
 package graft.store
 
-import java.nio.file.attribute.PosixFilePermission
+import java.io.FileNotFoundException
+import java.nio.file.{Files, NoSuchFileException}
+import java.nio.file.attribute.{FileTime, PosixFileAttributes, PosixFilePermission}
 
-import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FileStatus, FileUtil, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 
-/** Local `file://` filesystem whose chmod is a java.nio syscall instead of
-  * a forked `chmod` process.
+/** Local `file://` filesystem whose chmod, readlink and file statuses are
+  * java.nio syscalls instead of forked `chmod`, `readlink` and `ls`
+  * processes.
   *
   * Without libhadoop.so (NativeIO), Hadoop's RawLocalFileSystem applies
   * permissions through `Shell.execCommand("chmod", ...)` — one forked
@@ -23,11 +26,78 @@ import org.apache.hadoop.fs.permission.FsPermission
   * 0777 (setuid/sticky — never produced by the create/mkdir default-
   * permission paths) fall back to the inherited shell path.
   *
+  * Statuses fork the same way: the stock status loads its permission,
+  * owner and group lazily, by running `ls -ld` on the path, the first
+  * time any of them is asked for — and `FileSystem.listFiles` asks for
+  * every entry it walks (the `LocatedFileStatus` copy), so each listing
+  * forked once per file, and a walk racing a writer's `_temporary`
+  * cleanup failed outright (`ls` on a vanished path). [[getFileStatus]]
+  * and [[listStatus]] here build EAGER statuses from one `stat` each.
+  *
   * Wired as `spark.hadoop.fs.file.impl` by [[graft.GraftSession]]. Must
   * stay a [[LocalFileSystem]] subtype: `FileSystem.getLocal` casts its
   * result, and the checksum layer is part of the local-fs contract.
   */
 final class NioRawLocalFileSystem extends RawLocalFileSystem {
+
+  private var blockSize: Long = 0L
+
+  override def initialize(uri: java.net.URI,
+                          conf: org.apache.hadoop.conf.Configuration): Unit = {
+    super.initialize(uri, conf)
+    blockSize = getDefaultBlockSize(new Path(uri))
+  }
+
+  /** The stock status, field for field, with nothing left to load. Like
+    * the stock one it describes a symlink's TARGET (`java.io.File`
+    * follows links, and the stock `ls -ld` runs on the canonical path).
+    * The permission keeps the sticky bit, as `FsPermission.valueOf`
+    * parses it from `ls`; setuid/setgid are not part of the stock reading
+    * either. None when the store has no unix attribute view (the caller
+    * falls back to the stock status).
+    */
+  private def eagerStatus(f: Path): Option[FileStatus] = {
+    val file = pathToFile(f)
+    val p = file.toPath
+    try {
+      val a = Files.readAttributes(p, // one stat for every field
+        "unix:mode,uid,gid,size,isDirectory,lastModifiedTime,lastAccessTime")
+      def millis(k: String) = a.get(k).asInstanceOf[FileTime].toMillis
+      val mode = a.get("mode").asInstanceOf[java.lang.Integer].intValue
+      Some(new FileStatus(a.get("size").asInstanceOf[java.lang.Long].longValue,
+        a.get("isDirectory") == java.lang.Boolean.TRUE, 1, blockSize,
+        millis("lastModifiedTime"), millis("lastAccessTime"),
+        new FsPermission((mode & 0x3ff).toShort), // 01777: rwx bits + sticky
+        NioRawLocalFileSystem.owners.computeIfAbsent(
+          a.get("uid").asInstanceOf[Integer], _ => Files.getOwner(p).getName),
+        NioRawLocalFileSystem.groups.computeIfAbsent(
+          a.get("gid").asInstanceOf[Integer],
+          _ => Files.readAttributes(p, classOf[PosixFileAttributes]).group.getName),
+        new Path(file.getPath).makeQualified(getUri, getWorkingDirectory)))
+    } catch {
+      case _: NoSuchFileException =>
+        throw new FileNotFoundException(s"File $f does not exist")
+      case _: UnsupportedOperationException | _: IllegalArgumentException => None
+    }
+  }
+
+  override def getFileStatus(f: Path): FileStatus =
+    eagerStatus(f).getOrElse(super.getFileStatus(f))
+
+  /** The stock listing over eager statuses: a directory lists its
+    * children, a file lists itself, and a child that vanishes between
+    * the directory read and its `stat` is skipped, not an error.
+    */
+  override def listStatus(f: Path): Array[FileStatus] =
+    eagerStatus(f) match {
+      case None => super.listStatus(f)
+      case Some(st) if !st.isDirectory => Array(st)
+      case Some(_) =>
+        FileUtil.list(pathToFile(f)).flatMap { name =>
+          try Some(getFileStatus(new Path(f, new Path(null, null, name))))
+          catch { case _: FileNotFoundException => None }
+        }
+    }
 
   /** Fork-free link status: without native Hadoop, the stock
     * implementation shells out one `readlink` PER CALL
@@ -95,6 +165,14 @@ final class NioRawLocalFileSystem extends RawLocalFileSystem {
   * fs, what `FileSystem.getLocal` expects) over the fork-free raw layer.
   */
 final class NioLocalFileSystem extends LocalFileSystem(new NioRawLocalFileSystem)
+
+private object NioRawLocalFileSystem {
+  /** uid → owner and gid → group names, resolved once per id for the
+    * process: the name lookup reads the passwd/group databases and costs
+    * several times the `stat` itself.
+    */
+  val owners, groups = new java.util.concurrent.ConcurrentHashMap[Integer, String]()
+}
 
 /** The FileContext twin ([[org.apache.hadoop.fs.AbstractFileSystem]]
   * tree): `FileContext` resolves `file://` through

@@ -450,13 +450,16 @@ final class TableStore(spark: SparkSession, root: String) {
       .exists(n => TableStore.isSwapSibling(n, table))
   }
 
-  def read(table: String): DataFrame = evolvedDdl(table) match {
-    // an evolved table reads under its DECLARED schema: files written
-    // before a column existed simply yield nulls for it (parquet's
-    // name-based projection), so evolution never rewrites a byte
-    case Some(ddl) => spark.read
-      .schema(org.apache.spark.sql.types.StructType.fromDDL(ddl))
-      .parquet(tablePath(table))
+  /** The whole table under its [[tableSchema]]: the evolved declaration
+    * when one exists (files written before a column existed simply yield
+    * nulls for it — parquet's name-based projection — so evolution never
+    * rewrites a byte), else the cached inference. Building the frame runs
+    * no Spark job; without a schema, Spark would run a schema-merge job
+    * per frame. A table with nothing to infer from keeps Spark's own
+    * inference (and its error).
+    */
+  def read(table: String): DataFrame = tableSchema(table) match {
+    case Some(schema) => spark.read.schema(schema).parquet(tablePath(table))
     case None => spark.read.parquet(tablePath(table))
   }
 
@@ -465,41 +468,66 @@ final class TableStore(spark: SparkSession, root: String) {
   private def evolvedDdl(table: String): Option[String] =
     getTableProp(table, SchemaProp)
 
-  /** Inferred-schema cache behind [[tableSchema]]: inference lists the
-    * whole directory, and the append fence consults the schema on EVERY
-    * append — at corpus file counts an uncached fence would turn each
-    * streamed batch into five O(#files) listings. Appends themselves
-    * cannot change a schema (that is what the fence forbids), so the
-    * cache invalidates only where a schema CAN change: evolution, the
-    * swap paths, recovery, and the empty-marker rewrite. Coherent under
-    * the single-writer lease; a foreign writer's out-of-band schema
-    * change surfaces on this instance's next swap/recovery (which
-    * invalidates) — and is already outside the lease contract.
+  /** Inferred-schema cache behind [[tableSchema]]: inference is a Spark
+    * job that lists the whole directory, and every read and every append
+    * fence consults the schema. Each entry is stamped with the table
+    * directory's modification time at inference ([[dirStamp]]): a swap
+    * (this instance's or a foreign writer's) replaces the directory, so a
+    * changed stamp means the entry may be stale and is re-inferred. Own
+    * writes that cannot change a schema (fenced appends, sidecar and
+    * lease files) also move the stamp; [[keepingSchema]] carries the entry
+    * across them. This instance's own swaps still drop their entry
+    * explicitly: on a filesystem with coarse modification times the
+    * replacement directory can carry the old stamp.
     */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
+  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
+    String, (Long, org.apache.spark.sql.types.StructType)]()
 
   private def invalidateSchema(table: String): Unit = {
     schemaCache.remove(table); ()
   }
 
+  /** The table directory's modification time, None for a missing table:
+    * one `stat`, no listing.
+    */
+  private def dirStamp(table: String): Option[Long] =
+    try Some(fs.getFileStatus(new Path(tablePath(table))).getModificationTime)
+    catch { case _: java.io.FileNotFoundException => None }
+
+  /** Run an own write that cannot change the table's schema, carrying a
+    * cached inference that was valid just before it over to the
+    * directory's new stamp — without this every streamed batch would
+    * re-infer in its append fence. A foreign swap racing the write is a
+    * concurrent second writer, outside the lease contract.
+    */
+  private def keepingSchema[T](table: String)(write: => T): T = {
+    val before = dirStamp(table)
+    val out = write
+    val hit = schemaCache.get(table)
+    if (hit != null && before.contains(hit._1))
+      dirStamp(table).foreach(now => schemaCache.replace(table, hit, (now, hit._2)))
+    out
+  }
+
   /** The table's EFFECTIVE schema — the evolved declaration when one
-    * exists, else the files' own. None for a missing table, and None
-    * when nothing readable exists to infer from (a dir wedged by a
-    * crashed write's `_temporary` debris — effectively schema-less, so
-    * there is nothing for an append to fork).
+    * exists, else the files' own (cached per directory stamp). None for
+    * a missing table, and None when nothing readable exists to infer
+    * from (a dir with no data files, or one wedged by a crashed write's
+    * `_temporary` debris — effectively schema-less, so there is nothing
+    * for an append to fork); None is never cached.
     */
   def tableSchema(table: String): Option[org.apache.spark.sql.types.StructType] =
-    if (!exists(table)) None
-    else evolvedDdl(table)
-      .map(org.apache.spark.sql.types.StructType.fromDDL)
-      .orElse(Option(schemaCache.get(table)))
-      .orElse(
-        try {
+    dirStamp(table).flatMap { stamp =>
+      evolvedDdl(table).map(org.apache.spark.sql.types.StructType.fromDDL).orElse {
+        val hit = schemaCache.get(table)
+        if (hit != null && hit._1 == stamp) Some(hit._2)
+        else try {
           val s = spark.read.parquet(tablePath(table)).schema
-          schemaCache.put(table, s)
+          schemaCache.put(table, (stamp, s))
           Some(s)
-        } catch { case _: org.apache.spark.sql.AnalysisException => None })
+        } catch { case _: org.apache.spark.sql.AnalysisException => None }
+      }
+    }
 
   /** Zero-rewrite ADDITIVE schema evolution: declare new (nullable)
     * columns in the table's sidecar schema. Existing files are never
@@ -605,7 +633,7 @@ final class TableStore(spark: SparkSession, root: String) {
   /** S9 — append-only insert (base.py:13-22). */
   def append(table: String, df: DataFrame): Unit = {
     validateAppendSchema(table, df)
-    df.write.mode("append").parquet(tablePath(table))
+    keepingSchema(table)(df.write.mode("append").parquet(tablePath(table)))
     invalidateListing(table)
   }
 
@@ -665,8 +693,8 @@ final class TableStore(spark: SparkSession, root: String) {
         return
       }
     }
-    df.write.mode("append").partitionBy(partitionCols: _*)
-      .parquet(tablePath(table))
+    keepingSchema(table)(df.write.mode("append").partitionBy(partitionCols: _*)
+      .parquet(tablePath(table)))
     invalidateListing(table)
   }
 
@@ -1106,16 +1134,16 @@ final class TableStore(spark: SparkSession, root: String) {
       case None => read(table).filter(lit(false))
     }
 
-  /** Read a SUBSET of a table's files under its base path, serving the
-    * evolved declared schema when one exists — every partial read
-    * (merge's affected slice, the pruned rewrites) must see exactly what
-    * [[read]] serves, or a pre-evolution file subset would resolve the
-    * old footer shape and break unions with evolved frames.
+  /** Read a SUBSET of a table's files under its base path, under the
+    * same cached [[tableSchema]] as [[read]] — every partial read
+    * (merge's affected slice, the pruned rewrites, the stats-pruned
+    * point reads) must see exactly what [[read]] serves, or a
+    * pre-evolution file subset would resolve the old footer shape and
+    * break unions with evolved frames. Building the frame runs no job.
     */
   private def readFilesUnder(table: String, rels: Seq[String]): DataFrame = {
     val reader = spark.read.option("basePath", tablePath(table))
-    evolvedDdl(table).foreach(ddl =>
-      reader.schema(org.apache.spark.sql.types.StructType.fromDDL(ddl)))
+    tableSchema(table).foreach(reader.schema)
     reader.parquet(rels.sorted.map(r => s"${tablePath(table)}/$r"): _*)
   }
 
@@ -2545,28 +2573,30 @@ final class TableStore(spark: SparkSession, root: String) {
       val cands = leaseCandidates(table, readPreAlways = true)
       if (cands.exists { case (_, o, e) => o != writerId && e > now })
         return false
-      val active = if (exists(table)) leasePath(table) else preLeasePath(table)
-      val content = s"v1\t$writerId\t${now + ttlMs}"
-      val ownLive = cands.exists { case (_, o, e) => o == writerId && e > now }
-      val ok =
-        if (ownLive) renewLeaseAtomic(active, content)
-        else {
-          // fresh grab or expired takeover: clear the active path with an
-          // atomic rename iff THE STALE RECORD WE VALIDATED still sits
-          // there, then create-exclusive
-          val conf = spark.sparkContext.hadoopConfiguration
-          val staleAtActive = Sidecar.read(active, conf)
-          (staleAtActive.isEmpty || retireLeaseFile(active, staleAtActive.get)) &&
-            createLeaseExclusive(active, content) &&
-            verifyOwnLease(active)
-        }
-      // the pre-table file is superseded the moment the in-dir lease is
-      // ours — retire our own copy so it cannot outlive a later release
-      if (ok && (active != preLeasePath(table)))
-        Sidecar.read(preLeasePath(table), spark.sparkContext.hadoopConfiguration)
-          .flatMap(parseLease).filter(_._1 == writerId)
-          .foreach(_ => fs.delete(preLeasePath(table), false))
-      ok
+      keepingSchema(table) {
+        val active = if (exists(table)) leasePath(table) else preLeasePath(table)
+        val content = s"v1\t$writerId\t${now + ttlMs}"
+        val ownLive = cands.exists { case (_, o, e) => o == writerId && e > now }
+        val ok =
+          if (ownLive) renewLeaseAtomic(active, content)
+          else {
+            // fresh grab or expired takeover: clear the active path with an
+            // atomic rename iff THE STALE RECORD WE VALIDATED still sits
+            // there, then create-exclusive
+            val conf = spark.sparkContext.hadoopConfiguration
+            val staleAtActive = Sidecar.read(active, conf)
+            (staleAtActive.isEmpty || retireLeaseFile(active, staleAtActive.get)) &&
+              createLeaseExclusive(active, content) &&
+              verifyOwnLease(active)
+          }
+        // the pre-table file is superseded the moment the in-dir lease is
+        // ours — retire our own copy so it cannot outlive a later release
+        if (ok && (active != preLeasePath(table)))
+          Sidecar.read(preLeasePath(table), spark.sparkContext.hadoopConfiguration)
+            .flatMap(parseLease).filter(_._1 == writerId)
+            .foreach(_ => fs.delete(preLeasePath(table), false))
+        ok
+      }
     }
 
   /** Post-create owner verification, tolerant of TRANSIENT absence: a
@@ -3005,7 +3035,7 @@ final class TableStore(spark: SparkSession, root: String) {
     new Path(tablePath(table) + s"/_graft_$key")
 
   def setTableProp(table: String, key: String, value: String): Unit =
-    writePropFile(propPath(table, key), value)
+    keepingSchema(table)(writePropFile(propPath(table, key), value))
 
   private def writePropFile(at: Path, value: String): Unit = {
     val out = fs.create(at, true)

@@ -1,9 +1,10 @@
 package graft.serve
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SharedSpark
+import graft.{SharedSpark, SparkJobs}
 import graft.pipeline.IngestPipeline
 import graft.store.{ObjectStore, TableStore}
 
@@ -35,9 +36,10 @@ class ServePruningSpec extends AnyFunSuite with SharedSpark {
   }
 
   /** documents: 3 id-banded files; chunks: 16 hive bucket dirs keyed the
-    * ingest's way; charts: 3 document_id-banded files.
+    * ingest's way; charts: 3 document_id-banded files, `chartsPerDoc`
+    * charts per document (ids d*7, d*7+1, ...).
     */
-  private def fixture(): (DocumentStore, TableStore) = {
+  private def fixture(chartsPerDoc: Int = 1): (DocumentStore, TableStore, ObjectStore) = {
     import spark.implicits._
     val root = tmpDir("serve-prune")
     val ts = new TableStore(spark, s"$root/tables")
@@ -57,16 +59,17 @@ class ServePruningSpec extends AnyFunSuite with SharedSpark {
     ts.setTableProp("document_chunks", "buckets", "16")
     for (b <- 0 until 3)
       ts.append("chart_data",
-        (b * 100L + 1 to b * 100L + 100).map(d =>
-          (d * 7, d, s"""{"type":"table"}""", s"documents/$d/charts/${d * 7}.png", now))
+        (b * 100L + 1 to b * 100L + 100).flatMap(d => (0 until chartsPerDoc).map(k =>
+          (d * 7 + k, d, s"""{"type":"table","k":$k}""",
+            s"documents/$d/charts/${d * 7 + k}.png", now)))
           .toDF("id", "document_id", "info", "image_path", "created_at")
           .coalesce(1))
-    val ds = new DocumentStore(spark, ts, new ObjectStore(spark, s"$root/bucket"))
-    (ds, ts)
+    val objects = new ObjectStore(spark, s"$root/bucket")
+    (new DocumentStore(spark, ts, objects), ts, objects)
   }
 
   test("getDocument plans a pruned file list on every table it touches") {
-    val (ds, ts) = fixture()
+    val (ds, ts, _) = fixture()
     val doc = ds.getDocument(150L)
     val files = doc.inputFiles
     assert(files.count(_.contains("/documents/")) == 1,
@@ -89,7 +92,7 @@ class ServePruningSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("getChunks and getCharts prune like the reference's FK index") {
-    val (ds, _) = fixture()
+    val (ds, _, _) = fixture()
     val chunks = ds.getChunks(42L)
     val b = IngestPipeline.chunkBucketScalar(42L, 16)
     assert(chunks.inputFiles.nonEmpty &&
@@ -103,7 +106,7 @@ class ServePruningSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("chart ownership check prunes on both conjuncts and stays exact") {
-    val (ds, ts) = fixture()
+    val (ds, ts, _) = fixture()
     // deleteChart's ownership probe: id 1750 belongs to document 250 —
     // claiming it under a different document must refuse
     assert(!ds.deleteChart(1L, 1750L))
@@ -114,7 +117,7 @@ class ServePruningSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("keyset pagination and batch lookup plan pruned tails, exact rows") {
-    val (ds, _) = fixture()
+    val (ds, _, _) = fixture()
     // page anchored past the second band: only the 201-300 file plans
     val page = ds.listDocumentsAfter(200L, limit = 10)
     assert(page.inputFiles.count(_.contains("/documents/")) == 1,
@@ -133,7 +136,7 @@ class ServePruningSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("batch chunk hydration confines itself to the ids' bucket dirs") {
-    val (ds, _) = fixture()
+    val (ds, _, _) = fixture()
     val ids = Seq(10L, 42L, 250L)
     val chunks = ds.getChunksForDocuments(ids)
     val buckets = ids.map(IngestPipeline.chunkBucketScalar(_, 16)).distinct
@@ -162,5 +165,108 @@ class ServePruningSpec extends AnyFunSuite with SharedSpark {
     assert(ds.getChartWithImage(1L, 2L).isEmpty)
     assert(ds.listDocumentsAfter(0L).count() == 0)
     assert(ds.getDocuments(Seq(1L, 2L)).count() == 0)
+  }
+
+  /** The groupBy/join shape getDocument had before its reads became
+    * single-partition: the same pruned reads and the same nesting, with
+    * the planner free to shuffle and broadcast. The byte-for-byte
+    * reference for the served JSON.
+    */
+  private def referenceDocument(ts: TableStore, id: Long): DataFrame = {
+    val b = IngestPipeline.chunkBucketScalar(id, 16)
+    val doc = ts.readRange("documents", "id", id, id)
+    val nestedChunks = ts.readRangeAll("document_chunks",
+        Seq(("doc_bucket", b, b), ("document_id", id, id)))
+      .groupBy("document_id")
+      .agg(sort_array(collect_list(struct(
+        col("chunk_index"), col("text_content"), col("entities"),
+        col("chunk_metadata"), col("created_at")))).as("chunks"))
+    val nestedCharts = ts.readRange("chart_data", "document_id", id, id)
+      .groupBy("document_id")
+      .agg(collect_list(struct(
+        col("id").as("chart_id"), col("info"), col("image_path"),
+        col("created_at"))).as("charts"))
+    doc
+      .join(nestedChunks, col("id") === nestedChunks("document_id"), "left_outer")
+      .join(nestedCharts, col("id") === nestedCharts("document_id"), "left_outer")
+      .select(doc("id"), col("filename"), col("total_chunks"), col("metainfo"),
+        doc("created_at"), col("updated_at"),
+        coalesce(col("chunks"), array()).as("chunks"),
+        coalesce(col("charts"), array()).as("charts"))
+  }
+
+  /** getChunks before its read became single-partition. */
+  private def referenceChunks(ts: TableStore, id: Long,
+                              start: Option[Int], end: Option[Int]): DataFrame = {
+    val b = IngestPipeline.chunkBucketScalar(id, 16)
+    var df = ts.readRangeAll("document_chunks",
+      Seq(("doc_bucket", b, b), ("document_id", id, id)))
+    start.foreach(s => df = df.filter(col("chunk_index") >= s))
+    end.foreach(e => df = df.filter(col("chunk_index") <= e))
+    df.orderBy("chunk_index")
+      .select("chunk_index", "text_content", "entities", "chunk_metadata", "created_at")
+  }
+
+  /** Drain a frame the way HttpShim serves an array: row JSON through
+    * `toLocalIterator`, one job per partition of the final plan.
+    */
+  private def served(df: DataFrame): Seq[String] = {
+    val it = df.toJSON.toLocalIterator()
+    val out = Seq.newBuilder[String]
+    while (it.hasNext) out += it.next()
+    out.result()
+  }
+
+  test("building any DocumentStore frame runs no Spark job") {
+    val (ds, _, _) = fixture()
+    def frames(): Seq[DataFrame] = Seq(ds.documents, ds.chunks, ds.charts,
+      ds.getDocument(150L), ds.getChunks(42L),
+      ds.getChunks(42L, startChunk = Some(1), endChunk = Some(1)),
+      ds.getCharts(250L), ds.listDocuments(10, 10),
+      ds.listDocumentsAfter(200L, 10), ds.getDocuments(Seq(5L, 250L)),
+      ds.getChunksForDocuments(Seq(10L, 42L)))
+    frames() // this store's first reads infer each table's schema once
+    val (_, jobs) = SparkJobs.during(spark)(frames())
+    assert(jobs == 0, s"building the serving frames ran $jobs Spark job(s)")
+  }
+
+  test("executing a serving read runs exactly one Spark job") {
+    val (ds, _, objects) = fixture()
+    objects.put(objects.chartKey(250L, 1750L), Array[Byte](-119, 80, 78, 71))
+    ds.getDocument(150L).collect() // schema inference of a fresh store
+    def jobs(read: => Any): Int = SparkJobs.during(spark)(read)._2
+    assert(jobs(ds.getDocument(150L).toJSON.collect()) == 1, "getDocument")
+    assert(jobs(served(ds.getChunks(42L))) == 1, "getChunks")
+    assert(jobs(served(ds.getChunks(42L, Some(1), Some(1)))) == 1, "getChunks range")
+    assert(jobs(served(ds.getCharts(250L))) == 1, "getCharts")
+    assert(jobs(served(ds.listDocuments(10, 10))) == 1, "listDocuments")
+    assert(jobs(ds.getChartWithImage(250L, 1750L).get) == 1, "getChartWithImage")
+    assert(jobs(ds.documentExists(150L)) == 1, "documentExists")
+  }
+
+  test("one-document reads plan no exchange and no broadcast") {
+    val (ds, _, _) = fixture(chartsPerDoc = 3)
+    for ((name, df) <- Seq("getDocument" -> ds.getDocument(150L),
+                           "getChunks" -> ds.getChunks(42L, Some(0), Some(1)),
+                           "getCharts" -> ds.getCharts(250L))) {
+      assert(df.collect().nonEmpty, name)
+      val ops = SparkJobs.operators(df.queryExecution.executedPlan)
+      val moved = ops.map(_.nodeName)
+        .filter(n => n.contains("Exchange") || n.startsWith("Broadcast"))
+      assert(moved.isEmpty, s"$name moves rows: ${moved.mkString(", ")}")
+    }
+  }
+
+  test("single-partition reads serve the reference shape's JSON byte for byte") {
+    val (ds, ts, _) = fixture(chartsPerDoc = 3)
+    for (id <- Seq(1L, 150L, 300L, 9999L)) {
+      val got = ds.getDocument(id).toJSON.collect().toSeq
+      assert(got == referenceDocument(ts, id).toJSON.collect().toSeq, s"document $id")
+      if (id != 9999L) assert(got.head.contains(s""""chart_id":${id * 7 + 2}"""))
+    }
+    for (id <- Seq(42L, 150L, 9999L);
+         (s, e) <- Seq((None, None), (Some(1), None), (None, Some(0)), (Some(1), Some(1))))
+      assert(served(ds.getChunks(id, s, e)) == served(referenceChunks(ts, id, s, e)),
+        s"chunks of $id in [$s, $e]")
   }
 }
