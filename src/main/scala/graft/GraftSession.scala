@@ -70,6 +70,27 @@ object GraftSession {
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
         "graft.store.NioLocalFs")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+
+  /** Entries of Spark's JVM-wide cache of compiled generated classes
+    * (`spark.sql.codegen.cache.maxEntries`, default 100). A static
+    * setting: the first session in a JVM fixes it for the JVM's life.
+    *
+    * The engine is one long-lived process that runs the same few query
+    * shapes again and again, so the cache must hold all of them at once.
+    * The default does not: one 80-document ingest call alone compiles
+    * 101 classes, so every later call recompiles most of its own. Once
+    * per-call values reach generated code as parameters
+    * ([[graft.plans.ParameterizeLiterals]]) the working set is fixed,
+    * and this size holds it with room to spare. Distinct classes each
+    * part compiles in a cold JVM with an unbounded cache (4-vCPU host,
+    * the benchmark's workloads): one 80-document ingest call 105, every
+    * serving route 48, one curate pass 145, the streaming ingest of six
+    * uploads 91 — 389 together, counting shared classes once per part;
+    * twice that is 778. A whole traced ingest_bulk run compiles 261 and
+    * a whole traced curate_export run 317.
+    */
+  val CodegenCacheEntries: Int = 1000
 
   /** The CLI mains' shared session: core count from SPARK_GRAFT_CPUS
     * (default 4), WARN logging — one place to evolve the entrypoint

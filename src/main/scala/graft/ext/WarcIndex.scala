@@ -250,8 +250,13 @@ object WarcIndex {
     */
   private[ext] val fetchedMemberCount = new java.util.concurrent.atomic.LongAdder
 
-  /** One index row — field names ARE the index column names. */
-  private final case class CdxRow(
+  /** One index row — field names ARE the index column names. Package
+    * visible, not private: a private nested class is private in the
+    * bytecode too, and the encoder's generated code must call its
+    * accessors (a private one makes the scan fall back to the
+    * interpreter).
+    */
+  private[ext] final case class CdxRow(
       file: String, offset: Long, length: Long, warc_type: String,
       url: String, content_type: String, warc_date: String,
       payload_bytes: Long, status: Option[Int], digest: String,

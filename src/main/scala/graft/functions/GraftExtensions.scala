@@ -12,6 +12,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(session => new graft.plans.ChunkBucketPruning(session))
+    ext.injectColumnar(_ => graft.plans.ParameterizeLiterals.columnarRule)
     ext.injectFunction((
       new FunctionIdentifier("graft_cosine"),
       new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine"),

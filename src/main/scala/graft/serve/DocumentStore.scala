@@ -31,6 +31,11 @@ import graft.store.{ObjectStore, TableStore}
   * planner's own `orderBy` and the nesting `groupBy` need no exchange and
   * the joins hash locally instead of broadcasting: each such read runs as
   * exactly one Spark job.
+  *
+  * No read generates per-key code: the key reaches the post-scan filter
+  * as a parameter ([[graft.plans.ParameterizeLiterals]]), so after the
+  * first read of each shape, reads on new keys compile nothing. The
+  * scans still prune on the plain key.
   */
 final class DocumentStore(
     spark: SparkSession,
@@ -223,19 +228,69 @@ final class DocumentStore(
     * (repository.py:86-105).
     */
   def getChunks(documentId: Long, startChunk: Option[Int] = None,
-                endChunk: Option[Int] = None): DataFrame = {
+                endChunk: Option[Int] = None): DataFrame =
+    chunkRange(documentId, startChunk, endChunk).orderBy("chunk_index")
+      .select(ChunkFields.map(col): _*)
+
+  private val ChunkFields =
+    Seq("chunk_index", "text_content", "entities", "chunk_metadata", "created_at")
+
+  private def chunkRange(documentId: Long, startChunk: Option[Int],
+                         endChunk: Option[Int]): DataFrame = {
     var df = chunksOf(documentId)
     startChunk.foreach(s => df = df.filter(col("chunk_index") >= s))
     endChunk.foreach(e => df = df.filter(col("chunk_index") <= e))
-    df.orderBy("chunk_index")
-      .select("chunk_index", "text_content", "entities", "chunk_metadata", "created_at")
+    df
   }
 
   /** S7+J2+P3+F5 — charts of one document (api.py:174-195). */
   def getCharts(documentId: Long): DataFrame =
     prunedEq("chart_data", ChartDdl, "document_id", documentId)
       .orderBy("id")
-      .select("id", "info", "image_path", "created_at")
+      .select(ChartFields.map(col): _*)
+
+  private val ChartFields = Seq("id", "info", "image_path", "created_at")
+
+  /** [[getChunks]] with the route's 404 guard (api.py:110-112) folded
+    * into the read: None when the document does not exist, else the
+    * range's rows as the JSON objects `getChunks(...).toJSON` yields.
+    */
+  def getChunksJson(documentId: Long, startChunk: Option[Int] = None,
+                    endChunk: Option[Int] = None): Option[Seq[String]] =
+    ofDocument(documentId, chunkRange(documentId, startChunk, endChunk),
+      "chunk_index", ChunkFields)
+
+  /** [[getCharts]] with the route's 404 guard folded in, as
+    * [[getChunksJson]].
+    */
+  def getChartsJson(documentId: Long): Option[Seq[String]] =
+    ofDocument(documentId,
+      prunedEq("chart_data", ChartDdl, "document_id", documentId), "id",
+      ChartFields)
+
+  /** One document's child rows (`children`, keyed by `document_id`) as
+    * JSON objects ordered by `order`, or None when the document is
+    * absent — in ONE job instead of an existence probe plus a read: the
+    * document's row left-joined to its children. No row means no
+    * document; one row with no child means a document without children
+    * (`200 []`). All inputs are single-partition reads, so the join is
+    * local and the sort needs no exchange.
+    */
+  private def ofDocument(documentId: Long, children: DataFrame, order: String,
+                         fields: Seq[String]): Option[Seq[String]] = {
+    // distinct, not limit(1): an in-stage limit names its counter field
+    // from a JVM-wide sequence, which makes every plan compile anew
+    val doc = prunedEq("documents", DocDdl, "id", documentId)
+      .select(col("id").as("_doc")).distinct()
+    val rows = doc
+      .join(children.hint("shuffle_hash"),
+        col("_doc") === children("document_id"), "left_outer")
+      .orderBy(children(order))
+      .select(when(children("document_id").isNotNull,
+        to_json(struct(fields.map(children(_)): _*))))
+      .collect().map(_.getString(0))
+    if (rows.isEmpty) None else Some(rows.filter(_ != null).toSeq)
+  }
 
   /** S7+J3+F5 — one chart row joined with its object-store blob by the
     * composite key (repository.py:142-167); None when the chart is absent

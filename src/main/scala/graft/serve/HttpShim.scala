@@ -153,14 +153,13 @@ final class HttpShim(store: DocumentStore, uploadDir: String, port: Int = 0,
         // end_chunk=-1 means an EMPTY range, not "no bound"
         withOptInts(ex, query, List("start_chunk", "end_chunk")) {
           case List(start, end) =>
-            // existence guard before returning children (api.py:110-112)
-            if (documentAbsent(id)) notFound(ex, "Document not found")
-            else jsonArray(ex, store.getChunks(id, start, end))
+            // existence guard before returning children (api.py:110-112),
+            // answered by the same job as the read
+            childrenOrNotFound(ex, store.getChunksJson(id, start, end))
           case other => sys.error(s"internal: expected 2 params, got $other")
         }
       case ("GET", List("documents", AsLong(id), "charts")) =>
-        if (documentAbsent(id)) notFound(ex, "Document not found")
-        else jsonArray(ex, store.getCharts(id))
+        childrenOrNotFound(ex, store.getChartsJson(id))
       case ("GET", List("documents", AsLong(id), "charts", AsLong(chartId))) =>
         store.getChartWithImage(id, chartId) match {
           case Some((_, bytes, contentType)) =>
@@ -409,8 +408,15 @@ final class HttpShim(store: DocumentStore, uploadDir: String, port: Int = 0,
     } else body(parsed.collect { case Right(a) => a })
   }
 
-  private def documentAbsent(id: Long): Boolean =
-    !store.documentExists(id) // pruned plan, not a whole-table filter
+  /** One document's child rows as a JSON array, or 404 when the document
+    * does not exist. The rows are one document's, so they are buffered.
+    */
+  private def childrenOrNotFound(ex: HttpExchange, rows: Option[Seq[String]]): Unit =
+    rows match {
+      case None => notFound(ex, "Document not found")
+      case Some(objs) => send(ex, 200, "application/json",
+        objs.mkString("[", ",", "]").getBytes(StandardCharsets.UTF_8))
+    }
 
   /** Rows → one JSON array, streamed to the client chunked via Spark's
     * own row serialization: the driver holds ONE row's JSON at a time

@@ -19,6 +19,9 @@ import graft.store.{ObjectStore, TableStore}
   */
 class ServePruningSpec extends AnyFunSuite with SharedSpark {
 
+  private lazy val fx = new ServeFixtures(spark, tmpDir)
+  import fx._
+
   test("chunkBucketScalar is bit-identical to the Column bucket") {
     val rnd = new scala.util.Random(12345)
     val ids = Seq(0L, 1L, -1L, 42L, Long.MaxValue, Long.MinValue) ++
@@ -33,39 +36,6 @@ class ServePruningSpec extends AnyFunSuite with SharedSpark {
           s"id=${r.getLong(0)} buckets=$b")
       }
     }
-  }
-
-  /** documents: 3 id-banded files; chunks: 16 hive bucket dirs keyed the
-    * ingest's way; charts: 3 document_id-banded files, `chartsPerDoc`
-    * charts per document (ids d*7, d*7+1, ...).
-    */
-  private def fixture(chartsPerDoc: Int = 1): (DocumentStore, TableStore, ObjectStore) = {
-    import spark.implicits._
-    val root = tmpDir("serve-prune")
-    val ts = new TableStore(spark, s"$root/tables")
-    val now = java.sql.Timestamp.valueOf("2026-01-15 08:30:00")
-    for (b <- 0 until 3)
-      ts.append("documents",
-        (b * 100L + 1 to b * 100L + 100).map(i =>
-          (i, s"doc$i.pdf", 2, s"""{"file_size":$i}""", now, now))
-          .toDF("id", "filename", "total_chunks", "metainfo",
-            "created_at", "updated_at").coalesce(1))
-    val chunkRows = (1L to 300L).flatMap(d => (0 until 2).map(ci =>
-      (d * 10 + ci, d, ci, s"text $d-$ci", "{}", "{}", now)))
-      .toDF("id", "document_id", "chunk_index", "text_content",
-        "entities", "chunk_metadata", "created_at")
-      .withColumn("doc_bucket", IngestPipeline.chunkBucket(col("document_id"), 16))
-    ts.appendPartitioned("document_chunks", chunkRows, Seq("doc_bucket"))
-    ts.setTableProp("document_chunks", "buckets", "16")
-    for (b <- 0 until 3)
-      ts.append("chart_data",
-        (b * 100L + 1 to b * 100L + 100).flatMap(d => (0 until chartsPerDoc).map(k =>
-          (d * 7 + k, d, s"""{"type":"table","k":$k}""",
-            s"documents/$d/charts/${d * 7 + k}.png", now)))
-          .toDF("id", "document_id", "info", "image_path", "created_at")
-          .coalesce(1))
-    val objects = new ObjectStore(spark, s"$root/bucket")
-    (new DocumentStore(spark, ts, objects), ts, objects)
   }
 
   test("getDocument plans a pruned file list on every table it touches") {
@@ -167,56 +137,6 @@ class ServePruningSpec extends AnyFunSuite with SharedSpark {
     assert(ds.getDocuments(Seq(1L, 2L)).count() == 0)
   }
 
-  /** The groupBy/join shape getDocument had before its reads became
-    * single-partition: the same pruned reads and the same nesting, with
-    * the planner free to shuffle and broadcast. The byte-for-byte
-    * reference for the served JSON.
-    */
-  private def referenceDocument(ts: TableStore, id: Long): DataFrame = {
-    val b = IngestPipeline.chunkBucketScalar(id, 16)
-    val doc = ts.readRange("documents", "id", id, id)
-    val nestedChunks = ts.readRangeAll("document_chunks",
-        Seq(("doc_bucket", b, b), ("document_id", id, id)))
-      .groupBy("document_id")
-      .agg(sort_array(collect_list(struct(
-        col("chunk_index"), col("text_content"), col("entities"),
-        col("chunk_metadata"), col("created_at")))).as("chunks"))
-    val nestedCharts = ts.readRange("chart_data", "document_id", id, id)
-      .groupBy("document_id")
-      .agg(collect_list(struct(
-        col("id").as("chart_id"), col("info"), col("image_path"),
-        col("created_at"))).as("charts"))
-    doc
-      .join(nestedChunks, col("id") === nestedChunks("document_id"), "left_outer")
-      .join(nestedCharts, col("id") === nestedCharts("document_id"), "left_outer")
-      .select(doc("id"), col("filename"), col("total_chunks"), col("metainfo"),
-        doc("created_at"), col("updated_at"),
-        coalesce(col("chunks"), array()).as("chunks"),
-        coalesce(col("charts"), array()).as("charts"))
-  }
-
-  /** getChunks before its read became single-partition. */
-  private def referenceChunks(ts: TableStore, id: Long,
-                              start: Option[Int], end: Option[Int]): DataFrame = {
-    val b = IngestPipeline.chunkBucketScalar(id, 16)
-    var df = ts.readRangeAll("document_chunks",
-      Seq(("doc_bucket", b, b), ("document_id", id, id)))
-    start.foreach(s => df = df.filter(col("chunk_index") >= s))
-    end.foreach(e => df = df.filter(col("chunk_index") <= e))
-    df.orderBy("chunk_index")
-      .select("chunk_index", "text_content", "entities", "chunk_metadata", "created_at")
-  }
-
-  /** Drain a frame the way HttpShim serves an array: row JSON through
-    * `toLocalIterator`, one job per partition of the final plan.
-    */
-  private def served(df: DataFrame): Seq[String] = {
-    val it = df.toJSON.toLocalIterator()
-    val out = Seq.newBuilder[String]
-    while (it.hasNext) out += it.next()
-    out.result()
-  }
-
   test("building any DocumentStore frame runs no Spark job") {
     val (ds, _, _) = fixture()
     def frames(): Seq[DataFrame] = Seq(ds.documents, ds.chunks, ds.charts,
@@ -242,6 +162,32 @@ class ServePruningSpec extends AnyFunSuite with SharedSpark {
     assert(jobs(served(ds.listDocuments(10, 10))) == 1, "listDocuments")
     assert(jobs(ds.getChartWithImage(250L, 1750L).get) == 1, "getChartWithImage")
     assert(jobs(ds.documentExists(150L)) == 1, "documentExists")
+    assert(jobs(ds.getChunksJson(42L, Some(1), None)) == 1, "getChunksJson")
+    // an absent key prunes every file away: nothing left to run
+    assert(jobs(ds.getChunksJson(9999L)) <= 1, "getChunksJson of an absent document")
+    assert(jobs(ds.getChartsJson(250L)) == 1, "getChartsJson")
+  }
+
+  test("a folded 404 guard answers exactly what the probe-then-read pair did") {
+    val (ds, ts, _) = fixture(chartsPerDoc = 3)
+    // document 301 exists without chunks or charts
+    import spark.implicits._
+    ts.append("documents", Seq((301L, "doc301.pdf", 0, "{}",
+      java.sql.Timestamp.valueOf("2026-01-15 08:30:00"),
+      java.sql.Timestamp.valueOf("2026-01-15 08:30:00")))
+      .toDF("id", "filename", "total_chunks", "metainfo", "created_at", "updated_at"))
+    def probeThenRead(id: Long, rows: => DataFrame): Option[Seq[String]] =
+      if (ds.documentExists(id)) Some(served(rows)) else None
+    for (id <- Seq(42L, 150L, 301L, 9999L);
+         (s, e) <- Seq((None, None), (Some(1), None), (None, Some(0)),
+                       (Some(1), Some(1)), (Some(5), None))) {
+      val got = ds.getChunksJson(id, s, e)
+      assert(got == probeThenRead(id, ds.getChunks(id, s, e)), s"chunks of $id in [$s, $e]")
+      assert(got.isEmpty == (id == 9999L), s"404 iff absent: $id")
+    }
+    for (id <- Seq(1L, 250L, 301L, 9999L))
+      assert(ds.getChartsJson(id) == probeThenRead(id, ds.getCharts(id)), s"charts of $id")
+    assert(ds.getChunksJson(301L).contains(Seq.empty), "a document without chunks is 200 []")
   }
 
   test("one-document reads plan no exchange and no broadcast") {
