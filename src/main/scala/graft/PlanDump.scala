@@ -9,16 +9,18 @@ package graft
   * (isFinalPlan=false), which is exactly the plan the optimizer
   * committed to before runtime re-planning.
   *
-  * Usage: runMain graft.PlanDump <sfDir> <outDir> [suffix] [serve|ingest]
+  * Usage: runMain graft.PlanDump <sfDir> <outDir> [suffix] [serve|ingest|run]
   * SPARK_GRAFT_ONLY=a,b,c restricts to named queries. With `serve`, the
   * dump is instead the serving reads of the store `etl_ingest_pipeline`
   * ingests (`serve_<read>_<suffix>.txt`), each EXECUTED first so the file
   * shows the final adaptive plan the read ran. With `ingest`, it is every
   * query that ingest executes, in order (`ingest_<nn>_<action>_<suffix>.txt`).
+  * With `run`, each selected query is collected and every query it
+  * executes is written, in order (`<name>_<nn>_<action>_<suffix>.txt`).
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: PlanDump <sfDir> <outDir> [suffix] [serve|ingest]")
+    require(args.length >= 2, "usage: PlanDump <sfDir> <outDir> [suffix] [serve|ingest|run]")
     val sfDir = args(0)
     val outDir = java.nio.file.Paths.get(args(1))
     val suffix = if (args.length > 2) args(2) else "before"
@@ -78,6 +80,12 @@ object PlanDump {
       dump("serve_get_charts", ran(store.getCharts(id)))
       dump("serve_list_documents", ran(store.listDocuments(0, 10)))
       dump("serve_list_documents_after", ran(store.listDocumentsAfter(id, 10)))
+    } else if (args.lift(3).contains("run")) {
+      selected.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+        executed(fn(spark, sfDir).collect()).zipWithIndex.foreach { case ((action, plan), i) =>
+          write(f"${name}_$i%02d_$action", plan)
+        }
+      }
     } else
       selected.toSeq.sortBy(_._1).foreach { case (name, fn) => dump(name, fn(spark, sfDir)) }
     spark.stop()

@@ -813,18 +813,17 @@ object Dedup {
     * but ~10x faster than interpreted array expressions).
     */
   def cosineNearDupPairs(emb: DataFrame, idCol: String, vecCol: String,
-                         blockCol: String, threshold: Double): DataFrame =
+                         blockCol: String, threshold: Double): DataFrame = {
     // codegen'd native cosine (same evaluation order and zero-vector
     // convention as the scalar twin, same rounding as BigDecimal HALF_UP —
     // Spark's round() IS that): the whole pair-scoring stage stays inside
-    // WholeStageCodegen instead of a per-pair deserializing .map. On a
-    // vanilla SparkSession (no GraftExtensions) cosineAuto falls back to
-    // the expression form — slower, identical values
+    // WholeStageCodegen instead of a per-pair deserializing .map
+    graft.functions.GraftExtensions.requireIn(emb.sparkSession)
     Similarity.blockedPairs(emb, idCol, vecCol, blockCol, orderedPairs = true)
       .select(col("id_a"), col("id_b"),
-        round(Similarity.cosineAuto(emb.sparkSession,
-          col("va"), col("vb")), 4).as("cos"))
+        round(Similarity.cosineNative(col("va"), col("vb")), 4).as("cos"))
       .filter(col("cos") >= threshold)
+  }
 
   /** SemDeDup (Abbas et al. 2023): semantic near-duplicate pairs found by
     * clustering the corpus first and comparing WITHIN clusters only — the
@@ -931,6 +930,7 @@ object Dedup {
     requireIntegral(df, keyCol)
     requireIntegral(exclude, excludeKeyCol)
     val spark = df.sparkSession
+    graft.functions.GraftExtensions.requireIn(spark)
     val base = df.filter(col(keyCol).isNotNull)
     // localCheckpoint: the exclusion keys feed three consumers (count,
     // bloom build, anti-join) — materialize the slim key column once
@@ -947,18 +947,16 @@ object Dedup {
     // stat.bloomFilter) keeps the probe inside WholeStageCodegen, but
     // embeds the serialized filter in the plan as a literal, which ships
     // per TASK and hex-renders in plan strings. Small filters take that
-    // deal; past the cutover (~1.7M keys at fpp 0.01) — or on a vanilla
-    // session without the extension — a broadcast + UDF ships the filter
-    // once per EXECUTOR instead. Both paths call the same
-    // mightContainLong, so results are identical.
+    // deal; past the cutover (~1.7M keys at fpp 0.01) a broadcast + UDF
+    // ships the filter once per EXECUTOR instead. Both paths call the
+    // same mightContainLong, so results are identical.
     val mightContain: Column => Column = {
       val blob = {
         val bos = new java.io.ByteArrayOutputStream()
         bloom.writeTo(bos)
         bos.toByteArray
       }
-      if (blob.length <= BloomLiteralMaxBytes &&
-          spark.catalog.functionExists("graft_might_contain")) {
+      if (blob.length <= BloomLiteralMaxBytes) {
         val filterLit = lit(blob)
         (k: Column) => call_function("graft_might_contain", filterLit, k)
       } else {

@@ -55,16 +55,14 @@ object Similarity {
   def cosineNative(a: Column, b: Column): Column =
     call_function("graft_cosine", a, b)
 
-  /** The fastest cosine available in `spark`: the codegen'd native
-    * function when a GraftSession/GraftExtensions session registered it,
-    * the expression form otherwise. Same evaluation order either way, so
-    * results are bit-for-bit identical — only throughput differs. Hot
-    * pairwise paths call this so a vanilla SparkSession still resolves.
+  /** The `cos` column every similarity ranking orders by: the native
+    * cosine rounded to 6 places, after failing fast on a session that
+    * lacks the engine's extension.
     */
-  def cosineAuto(spark: org.apache.spark.sql.SparkSession,
-                 a: Column, b: Column): Column =
-    if (spark.catalog.functionExists("graft_cosine")) cosineNative(a, b)
-    else cosine(a, b)
+  private def cosScore(spark: SparkSession, a: Column, b: Column): Column = {
+    graft.functions.GraftExtensions.requireIn(spark)
+    round(cosineNative(a, b), 6).as("cos")
+  }
 
   /** Unit-normalize a vector against a PRECOMPUTED norm column. Callers
     * materialize the norm once per row (`withColumn("nrm", l2Norm(v))`)
@@ -101,8 +99,7 @@ object Similarity {
                          idCol: String, vecCol: String, k: Int): DataFrame =
     candidates.crossJoin(broadcast(queryDf))
       .select(col(idCol),
-        round(cosineAuto(candidates.sparkSession,
-          col(vecCol).cast("array<double>"), col("qv")), 6).as("cos"))
+        cosScore(candidates.sparkSession, col(vecCol).cast("array<double>"), col("qv")))
       .orderBy(col("cos").desc, col(idCol))
       .limit(k)
 
@@ -144,7 +141,7 @@ object Similarity {
       .crossJoin(broadcast(q))
       .filter(col("id") =!= col("query_id"))
       .select(col("query_id"), col("id"),
-        round(cosineAuto(spark, col("_c_v"), col("_q_v")), 6).as("cos"))
+        cosScore(spark, col("_c_v"), col("_q_v")))
     topKPerGroup(scored, "query_id", "id", "cos", k, "id", "cos")
   }
 
@@ -180,7 +177,7 @@ object Similarity {
       .crossJoin(broadcast(q))
       .filter(col("_c_label") =!= col("_q_label"))
       .select(col("query_id"), col("id"),
-        round(cosineAuto(spark, col("_c_v"), col("_q_v")), 6).as("cos"))
+        cosScore(spark, col("_c_v"), col("_q_v")))
     topKPerGroup(scored, "query_id", "id", "cos", k, "id", "cos")
   }
 
@@ -274,28 +271,18 @@ object Similarity {
   }
 
   /** Shared per-group bounded top-k tail: the native map-side-combinable
-    * aggregate when the extension registered it, the typed-Aggregator
-    * fallback otherwise (identical winners, NaN-worst ordering either
-    * way); explodes to (groupCol, idOut, scoreOut). Null ids/scores are
-    * dropped up front so both paths share one convention — the native
-    * aggregate skips nulls internally, but the typed fallback's tuple
-    * encoder would throw on a null reaching it (e.g. a null embedding
-    * surviving into a cosine).
+    * `graft_topk_by_score` aggregate (NaN-worst ordering; null ids and
+    * scores skipped, like SQL aggregates skip nulls), exploded to
+    * (groupCol, idOut, scoreOut).
     */
   private def topKPerGroup(scored: DataFrame, groupCol: String,
                            idCol: String, scoreCol: String, k: Int,
-                           idOut: String, scoreOut: String): DataFrame = {
-    val spark = scored.sparkSession
-    val topk =
-      if (spark.catalog.functionExists("graft_topk_by_score"))
-        call_function("graft_topk_by_score", col(idCol), col(scoreCol), lit(k))
-      else graft.functions.TopKByScore.topKByScore(col(idCol), col(scoreCol), k)
-    scored.filter(col(idCol).isNotNull && col(scoreCol).isNotNull)
-      .groupBy(groupCol).agg(topk.as("_nn"))
+                           idOut: String, scoreOut: String): DataFrame =
+    scored.groupBy(groupCol)
+      .agg(call_function("graft_topk_by_score", col(idCol), col(scoreCol), lit(k)).as("_nn"))
       .select(col(groupCol), explode(col("_nn")).as("_n"))
       .select(col(groupCol), col("_n.id").as(idOut),
         col("_n.score").as(scoreOut))
-  }
 
   /** Approximate top-k via LSH bucketing: candidates are vectors whose
     * signature is within `maxHamming` bits of the query signature (checked
@@ -356,7 +343,7 @@ object Similarity {
     * [[knnJoinByCell]]).
     *
     * Scale shape: the top-k selection is a bounded-heap AGGREGATE
-    * (graft.functions.TopKByScore), not a row_number window — partial
+    * (`graft_topk_by_score`), not a row_number window — partial
     * aggregation truncates each group to k rows on the map side, so the
     * exchange carries at most k rows per (vector, input partition)
     * instead of every scored pair. For blocks of B vectors that is k vs
@@ -367,7 +354,7 @@ object Similarity {
               blockCol: String, k: Int): DataFrame = {
     val pairs = blockedPairs(emb, idCol, vecCol, blockCol, orderedPairs = false)
       .select(col("id_a"), col("id_b"),
-        round(cosineAuto(emb.sparkSession, col("va"), col("vb")), 6).as("cos"))
+        cosScore(emb.sparkSession, col("va"), col("vb")))
     topKPerGroup(pairs, "id_a", "id_b", "cos", k, "id_b", "cos")
   }
 
@@ -609,7 +596,7 @@ object Similarity {
     val scored = scan.join(broadcast(qCells), Seq("ivf_cell"))
       .filter(col("id") =!= col("query_id"))
       .select(col("query_id"), col("id"),
-        round(cosineAuto(spark, col("_c_v"), col("_q_v")), 6).as("cos"))
+        cosScore(spark, col("_c_v"), col("_q_v")))
     topKPerGroup(scored, "query_id", "id", "cos", k, "id", "cos")
   }
 
@@ -759,7 +746,7 @@ object Similarity {
     val scored = scan.join(broadcast(qCells), Seq("ivf_cell"))
       .filter(col("id") =!= col("query_id"))
       .select(col("query_id"), col("id"),
-        round(cosineAuto(spark, col("_c_v"), col("_q_v")), 6).as("cos"))
+        cosScore(spark, col("_c_v"), col("_q_v")))
     topKPerGroup(scored, "query_id", "id", "cos", k, "id", "cos")
   }
 

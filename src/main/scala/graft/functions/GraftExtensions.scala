@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
@@ -57,4 +57,19 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           .toAggregateExpression()
       }))
   }
+}
+
+object GraftExtensions {
+
+  /** Fail fast on a session built without [[GraftExtensions]]: the
+    * engine's native functions resolve nowhere else, and Spark's own
+    * unresolved-routine error names neither the cause nor the fix. The
+    * one place the engine asks the catalog whether they are registered.
+    */
+  def requireIn(spark: SparkSession): Unit =
+    if (!spark.catalog.functionExists("graft_cosine"))
+      throw new IllegalStateException(
+        "this SparkSession lacks graft's native functions: build it with " +
+          "graft.GraftSession, or start it with " +
+          "spark.sql.extensions=graft.functions.GraftExtensions")
 }

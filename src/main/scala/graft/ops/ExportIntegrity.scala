@@ -402,6 +402,9 @@ object ExportIntegrity {
           .otherwise(lit("ok")).as("status"),
         col("expected_bytes"), col("actual_bytes"),
         col("expected_sha256"), col("actual_sha256"))
-      .orderBy("file")
+      // one row per export file (manifest ∪ directory listing), so a
+      // single-partition sort is bounded — and unlike `.orderBy` it runs
+      // no RangePartitioner sampling pass over the join
+      .repartition(1).sortWithinPartitions("file")
   }
 }

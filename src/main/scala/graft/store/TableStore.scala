@@ -414,19 +414,21 @@ object TableStore {
 }
 
 /** Parquet-backed relational table store with CRUD semantics over immutable
-  * files (SURVEY §7.4.1). Reads/appends are plain Spark jobs; UPDATE and
-  * DELETE are copy-on-write rewrites committed with an atomic directory
-  * swap, replicating the reference's single-row mutations (base.py:38-66)
-  * under a single-writer contract (the reference, too, has exactly one
-  * writer — its lone watchdog handler, main.py:154-159).
+  * files (SURVEY §7.4.1), replicating the reference's row mutations
+  * (base.py:38-66) under a single-writer contract (the reference, too, has
+  * exactly one writer — its lone watchdog handler, main.py:154-159).
   *
-  * Scale note: appends never rewrite, and the copy-on-write CRUD paths
-  * prune — a partitioned table rewrites only the directories holding
-  * matching rows ([[prunedRewrite]]), an unpartitioned table only the
-  * FILES holding matching rows ([[filePrunedRewrite]]); untouched data
-  * crosses the commit by metadata-only renames. With
-  * [[compactIncremental]] keeping files near 128 MB, a single-row
-  * mutation costs one file's rewrite regardless of table size.
+  * Reads and appends are plain Spark jobs. Every rewrite commits through
+  * ONE protocol, [[stageAndSwap]]: stage the new content beside the table,
+  * then swap directories by rename, carrying untouched files across by
+  * metadata-only renames — whole-table overwrites and compaction as much
+  * as the row mutations, so one crash contract and one recovery
+  * ([[recoverSwapDebris]]) cover them all. UPDATE, DELETE, MERGE and CDC
+  * apply are ONE copy-on-write slice rewrite, [[rewriteSlice]]: a flat
+  * table rewrites only the FILES holding affected rows, a partitioned one
+  * only the affected partition DIRECTORIES. With [[compactIncremental]]
+  * keeping files near 128 MB, a single-row mutation costs one file's
+  * rewrite regardless of table size.
   */
 final class TableStore(spark: SparkSession, root: String) {
 
@@ -719,40 +721,8 @@ final class TableStore(spark: SparkSession, root: String) {
     * (distinct directory names) and are garbage, not corruption.
     */
   def overwriteAtomic(table: String, df: DataFrame,
-                      partitionCols: Seq[String] = Nil): Unit = {
-    checkNoForeignLease(table, "atomic overwrite") // single-writer gate
-    val dest = new Path(tablePath(table))
-    val tmp = new Path(tablePath(table) + s".tmp-${System.nanoTime()}")
-    val old = new Path(tablePath(table) + s".old-${System.nanoTime()}")
-    // an empty partitioned write produces no files at all (schema lost);
-    // fall back to one empty unpartitioned file, which preserves schema —
-    // appendPartitioned clears it before the next partitioned append
-    val effectiveParts = if (partitionCols.nonEmpty && df.isEmpty) Nil else partitionCols
-    val props = allTableProps(table) // survive the swap
-    df.write.mode("overwrite").partitionBy(effectiveParts: _*)
-      .parquet(tmp.toString) // forces execution first
-    props.foreach { case (k, v) => writePropFile(new Path(tmp, s"_graft_$k"), v) }
-    // carry the runner's OWN lease across the swap (foreign refused
-    // above) — crc-free like every lease write, so renewal's raw
-    // rename-over never strands a mismatching checksum sidecar
-    Sidecar.read(leasePath(table), spark.sparkContext.hadoopConfiguration)
-      .foreach(t => writeLeaseRecordRaw(new Path(tmp, WriterLease), t))
-    writeSwapMarkers(tmp, Nil) // staging complete — recovery may roll forward
-    failpoint("tmp-written")
-    val f = fs
-    if (f.exists(dest) && !f.rename(dest, old))
-      throw new java.io.IOException(s"swap failed for $table")
-    failpoint("old-aside")
-    if (!f.rename(tmp, dest)) {
-      f.rename(old, dest) // roll back
-      throw new java.io.IOException(s"swap failed for $table")
-    }
-    failpoint("swapped")
-    f.delete(old, true)
-    deleteSwapMarkers(dest)
-    invalidateListing(table)
-    invalidateSchema(table)
-  }
+                      partitionCols: Seq[String] = Nil): Unit =
+    stageAndSwap(table, df, Nil, partitionCols)
 
   /** Crash-injection seam for the swap's property test: called at the
     * named points of the two-rename commit; a production store never
@@ -780,8 +750,7 @@ final class TableStore(spark: SparkSession, root: String) {
     if (partitionCols.nonEmpty &&
         assignments.keys.exists(k => partitionCols.exists(_.equalsIgnoreCase(k))))
       overwriteAtomic(table, transform(read(table)), partitionCols)
-    else if (partitionCols.isEmpty) filePrunedRewrite(table, cond)(transform)
-    else prunedRewrite(table, cond, partitionCols)(transform)
+    else rewriteSlice(table, partitionCols, matching(table, cond))(transform)
   }
 
   /** M2/J4 — delete by predicate as a keep-the-rest rewrite. NULL-valued
@@ -790,10 +759,16 @@ final class TableStore(spark: SparkSession, root: String) {
     */
   def deleteWhere(table: String, cond: Column,
                   partitionCols: Seq[String] = Nil): Unit =
-    if (partitionCols.isEmpty)
-      filePrunedRewrite(table, cond)(_.filter(!coalesce(cond, lit(false))))
-    else prunedRewrite(table, cond, partitionCols)(
+    rewriteSlice(table, partitionCols, matching(table, cond))(
       _.filter(!coalesce(cond, lit(false))))
+
+  /** The CRUD discovery frame: rows matching the RAW cond (filter already
+    * treats NULL as false), so it stays translatable to a parquet
+    * data-source filter — a coalesce wrapper would defeat the row-group
+    * stats skipping the slice rewrite exists for.
+    */
+  private def matching(table: String, cond: Column)(out: Seq[Column]): DataFrame =
+    read(table).filter(cond).select(out: _*)
 
   /** True iff every partition column's type is one whose hive directory
     * rendering ([[hiveDirRel]]) is proven to match Spark's writer —
@@ -850,19 +825,17 @@ final class TableStore(spark: SparkSession, root: String) {
     *    holding matched keys (`input_file_name`, capped at 4096); the
     *    staged rewrite reads only those files, drops their matched rows
     *    (left-anti on key) and unions the whole source; every untouched
-    *    file crosses [[stageAndSwapWithKept]] by metadata-only rename;
+    *    file crosses [[stageAndSwap]] by metadata-only rename;
     *  - partitioned: affected DIRECTORIES = dirs holding matched keys ∪
     *    dirs any source row lands in (a matched key whose partition value
     *    changed vacates the old dir and lands in the new — both are
     *    affected; a brand-new partition value simply isn't in the kept
     *    set, so the staged write creates it); unaffected dirs rename
     *    across whole.
-    * Falls back to the whole-table rewrite on the same conditions as the
-    * other CRUD paths: too many affected files/dirs, hive-on-disk layout
-    * addressed without partitionCols, unmappable file names, unrenderable
-    * partition types. Commit is the table-level ALL-OR-NOTHING swap with
-    * the shared failpoints, so [[recoverSwapDebris]] covers a mid-merge
-    * crash.
+    * Both run through [[rewriteSlice]], so the whole-table fallbacks are
+    * the CRUD paths' own, and the commit is the table-level
+    * ALL-OR-NOTHING swap with the shared failpoints — [[recoverSwapDebris]]
+    * covers a mid-merge crash.
     */
   def merge(table: String, source: DataFrame, keyCols: Seq[String],
             partitionCols: Seq[String] = Nil): Unit = {
@@ -953,89 +926,20 @@ final class TableStore(spark: SparkSession, root: String) {
                         keyCols: Seq[String],
                         partitionCols: Seq[String]): Unit = {
     val srcKeys = src.select(keyCols.map(col): _*)
+    // input_file_name() must be projected BEFORE the join: evaluated
+    // above a shuffle (sort-merge path) it returns the empty string
+    def matched(out: Seq[Column]): DataFrame =
+      read(table).select(keyCols.map(col) ++ out: _*)
+        .join(srcKeys, keyCols, "left_semi").drop(keyCols: _*)
+    def appendInserts(): Unit =
+      if (partitionCols.nonEmpty) appendPartitioned(table, insertDf, partitionCols)
+      else if (!insertDf.isEmpty) append(table, insertDf)
     // new content of the affected slice: its rows minus every CHANGED
-    // key (old versions and deletions drop), plus the re-entering rows
-    def stagedFrom(affected: DataFrame): DataFrame =
-      affected.join(srcKeys, keyCols, "left_anti").unionByName(insertDf)
-    def full(): Unit =
-      overwriteAtomic(table, stagedFrom(read(table)), partitionCols)
-
-    if (partitionCols.isEmpty) {
-      val visible = listVisibleFiles(table).map(_._1)
-      // hive-on-disk addressed unpartitioned: same degrade as the CRUD
-      // paths — a mixed staged layout would be unreadable
-      if (visible.exists(_.contains('/'))) return full()
-      // input_file_name() must be projected BEFORE the join: evaluated
-      // above a shuffle (sort-merge path) it returns the empty string
-      val fileCol = graft.ops.Cols.fresh(read(table), "_graft_file")
-      val affectedRaw = read(table)
-        .select(keyCols.map(col) :+ input_file_name().as(fileCol): _*)
-        .join(srcKeys, keyCols, "left_semi")
-        .select(fileCol).distinct().limit(4097).collect()
-        .map(_.getString(0))
-      if (affectedRaw.isEmpty) {
-        if (!insertDf.isEmpty) append(table, insertDf)
-        return
-      }
-      if (affectedRaw.length > 4096) return full()
-      val rels = affectedRaw.map(relativizer(table))
-      if (rels.exists(_.isEmpty)) return full()
-      val affected = rels.flatten.toSet
-      if (!affected.subsetOf(visible.toSet)) return full()
-      if (affected.size * 2 > visible.size) return full()
-      val kept = visible.filterNot(affected)
-      val stagedDf = stagedFrom(readFilesUnder(table, affected.toSeq))
-      stageAndSwapWithKept(table, stagedDf, kept, Nil)
-    } else {
-      if (!partitionTypesRenderable(read(table).schema, partitionCols))
-        return full()
-      val visible = listVisibleFiles(table).map(_._1)
-      // a table that is FLAT on disk (root-level data files) must not
-      // take ANY partitioned shortcut: a hive-partitioned append or
-      // staged write next to root-level parquet is a mixed layout no
-      // reader can load — the mirror of the unpartitioned branch's
-      // guard. The whole-table rewrite converges it to the partitioned
-      // layout the caller addressed. (Root-level NON-parquet strays are
-      // foreign files, tolerated below by keeping them file-by-file.)
-      if (visible.exists(v => !v.contains('/') && v.endsWith(".parquet")))
-        return full()
-      val dirRel = hiveDirRel(partitionCols) _
-      val matchedTuples = read(table).join(srcKeys, keyCols, "left_semi")
-        .select(partitionCols.map(col): _*).distinct().limit(257).collect()
-      if (matchedTuples.isEmpty) { appendPartitioned(table, insertDf, partitionCols); return }
-      // insert-target dirs derive from the RE-ENTERING rows only — a
-      // tombstone's partition values may legitimately be null/garbage
-      val sourceTuples = insertDf
-        .select(partitionCols.map(col): _*).distinct().limit(257).collect()
-      if (matchedTuples.length > 256 || sourceTuples.length > 256) return full()
-
-      val leafDirs = visible.collect {
-        case rel if rel.contains('/') => rel.take(rel.lastIndexOf('/'))
-      }.toSet
-      val matchedDirs = matchedTuples.map(dirRel).toSet
-      // matched dirs come FROM the table, so they must exist on disk —
-      // anything else is a rendering-class bug and gets the safe path
-      if (!matchedDirs.subsetOf(leafDirs)) return full()
-      // a source-derived dir may legitimately not exist yet (new
-      // partition value); it joins the affected set so any CURRENT rows
-      // of an existing insert-target dir enter the staged rewrite
-      val allTuples = (matchedTuples ++ sourceTuples)
-        .map(r => dirRel(r) -> r).toMap
-      if (allTuples.size > 256) return full()
-      val affectedDirs = allTuples.keySet
-      val kept = (leafDirs -- affectedDirs).toSeq ++
-        visible.filterNot(_.contains('/'))
-
-      // value-based partition-pruned input over ALL affected dirs
-      val prunePred = allTuples.values.map { r =>
-        partitionCols.zipWithIndex.map { case (c, i) =>
-          val v = r.get(i)
-          if (v == null) col(c).isNull else col(c) <=> lit(v)
-        }.reduce(_ && _)
-      }.reduce(_ || _)
-      stageAndSwapWithKept(table,
-        stagedFrom(read(table).filter(prunePred)), kept, partitionCols)
-    }
+    // key (old versions and deletions drop), plus the re-entering rows.
+    // Insert targets are the RE-ENTERING rows only: a tombstone's
+    // partition values may legitimately be null or garbage
+    rewriteSlice(table, partitionCols, matched, Some(insertDf), appendInserts())(
+      _.join(srcKeys, keyCols, "left_anti").unionByName(insertDf))
   }
 
   /** The structural half of the [[merge]] source contract (no Spark job):
@@ -1067,53 +971,99 @@ final class TableStore(spark: SparkSession, root: String) {
         s"(${keyCols.mkString(", ")}); offending key: ${offenders.head}")
   }
 
-  /** Copy-on-write rewrite of ONLY the data files holding rows that match
-    * `cond` — the unpartitioned sibling of [[prunedRewrite]], and the
-    * path that makes single-row CRUD affordable at corpus scale: a
-    * metainfo patch on a compacted documents table rewrites the one
-    * ~128 MB file containing the row, not the table.
+  /** The one copy-on-write slice rewrite behind every row mutation
+    * ([[updateWhere]], [[deleteWhere]], [[merge]], [[mergeCdc]]): find the
+    * slice holding affected rows — the FILES of a flat table, the hive
+    * partition DIRECTORIES of a partitioned one — stage `transform` of
+    * just that slice, and commit with [[stageAndSwap]], every untouched
+    * file or directory crossing by metadata-only rename. A single-row
+    * patch on a compacted table rewrites one ~128 MB file, a one-document
+    * cascade delete on a bucketed table one directory (pinned by
+    * `FilePrunedRewriteSpec` and `PrunedRewriteSpec` on names + mtimes).
     *
-    * One column-pruned scan with the predicate pushed to parquet (row-
-    * group stats skip non-matching files cheaply) lists the files that
-    * hold matching rows via `input_file_name()`; the transform runs over
-    * just those files, and every untouched file crosses the
-    * [[stageAndSwapWithKept]] swap by metadata-only rename. Unlike the
-    * per-directory variant this commit is table-level ALL-OR-NOTHING —
-    * one swap at the end. Falls back to the whole-table rewrite when the
-    * match spans more than half the files (rename churn would exceed the
-    * savings) or when a listed file can't be mapped back to a visible
-    * data file (foreign layouts).
+    * `affected(out)` is the table's affected rows projected to `out` in
+    * one column-pruned scan: `input_file_name()` for a flat table, the
+    * partition columns otherwise — each under a fresh alias, so a caller
+    * can project `out` next to its own columns before a join.
+    * `insertTargets` are rows that land in the table on top of the
+    * transform (merge's re-entering rows): their partition tuples join
+    * the affected set, so a target directory's CURRENT rows enter the
+    * staged rewrite and a brand-new one is simply created by it. When no
+    * row is affected, `onNoMatch` runs instead (CRUD writes nothing;
+    * merge appends its inserts).
+    *
+    * The staged input is the partition-pruned scan of the affected
+    * tuples — null-safe conjunctions OR'd per tuple, which land in the
+    * scan's PartitionFilters — or the affected files read under their
+    * base path. Falls back to the whole-table rewrite when:
+    *  - the on-disk layout disagrees with the addressing — hive
+    *    directories under a flat address, or root-level parquet under a
+    *    partitioned one: a staged write of the other layout next to kept
+    *    files is a mixed layout no reader can load, and the whole-table
+    *    rewrite converges it (checked FIRST, so even a mutation matching
+    *    nothing converges a mis-addressed table);
+    *  - a partition type's directory rendering is unproven
+    *    ([[partitionTypesRenderable]]);
+    *  - more than 4096 files or 256 directories are affected (pruning
+    *    gains nothing, and the driver must not hold an unbounded list for
+    *    a corpus-wide predicate);
+    *  - an affected file maps outside the visible set, or a matched
+    *    tuple's directory is not on disk (a rendering-class bug must not
+    *    drop or miss data);
+    *  - the match spans more than half of a flat table's files (rename
+    *    churn would exceed the savings).
+    * Root-level non-parquet strays (a foreign writer's) are kept as-is.
     */
-  private def filePrunedRewrite(table: String, cond: Column)
-                               (transform: DataFrame => DataFrame): Unit = {
-    def full(): Unit = overwriteAtomic(table, transform(read(table)))
+  private def rewriteSlice(table: String, partitionCols: Seq[String],
+                           affected: Seq[Column] => DataFrame,
+                           insertTargets: Option[DataFrame] = None,
+                           onNoMatch: => Unit = ())
+                          (transform: DataFrame => DataFrame): Unit = {
+    def full(): Unit = overwriteAtomic(table, transform(read(table)), partitionCols)
     val visible = listVisibleFiles(table).map(_._1)
-    // a table that is hive-partitioned ON DISK but addressed without
-    // partitionCols must not take this path: an unpartitioned staged
-    // write next to kept partition directories is a mixed layout no
-    // reader can load — degrade to the (flattening) whole-table rewrite
-    // the pre-pruning code performed
-    if (visible.exists(_.contains('/'))) return full()
-    // discovery filters on the RAW cond (filter already treats NULL as
-    // false) so it stays translatable to a parquet data-source filter —
-    // a coalesce wrapper would defeat the row-group stats skipping this
-    // path exists for. Capped collect: past 4096 affected files the
-    // pruning gains nothing, and the driver must not hold an unbounded
-    // name list for a corpus-wide predicate
-    val affectedRaw = read(table).filter(cond)
-      .select(input_file_name().as("_f")).distinct().limit(4097).collect()
-      .map(_.getString(0))
-    if (affectedRaw.isEmpty) return // nothing matches: zero write I/O
-    if (affectedRaw.length > 4096) return full()
-    val relOf = relativizer(table)
-    val rels = affectedRaw.map(relOf)
-    if (rels.exists(_.isEmpty)) return full()
-    val affected = rels.flatten.toSet
-    if (!affected.subsetOf(visible.toSet)) return full()
-    if (affected.size * 2 > visible.size) return full()
-    val kept = visible.filterNot(affected)
-    val transformed = transform(readFilesUnder(table, affected.toSeq))
-    stageAndSwapWithKept(table, transformed, kept, Nil)
+    val (nested, rootLevel) = visible.partition(_.contains('/'))
+    val flat = partitionCols.isEmpty
+    val misaddressed =
+      if (flat) nested.nonEmpty
+      else rootLevel.exists(_.endsWith(".parquet")) ||
+        !partitionTypesRenderable(read(table).schema, partitionCols)
+    if (misaddressed) return full()
+    val columns = read(table).columns.toSeq
+    def capped(df: DataFrame, cap: Int): Array[org.apache.spark.sql.Row] =
+      df.distinct().limit(cap + 1).collect()
+    if (flat) {
+      val out = input_file_name().as(graft.ops.Cols.fresh(columns, "_graft_file"))
+      val found = capped(affected(Seq(out)), 4096).map(_.getString(0))
+      if (found.isEmpty) return onNoMatch
+      if (found.length > 4096) return full()
+      val rels = found.map(relativizer(table))
+      if (rels.exists(_.isEmpty)) return full()
+      val slice = rels.flatten.toSet
+      if (!slice.subsetOf(visible.toSet) || slice.size * 2 > visible.size) return full()
+      stageAndSwap(table, transform(readFilesUnder(table, slice.toSeq)),
+        visible.filterNot(slice), Nil)
+    } else {
+      val out = partitionCols.indices.map(i =>
+        col(partitionCols(i)).as(graft.ops.Cols.fresh(columns, s"_graft_part$i")))
+      val matched = capped(affected(out), 256)
+      if (matched.isEmpty) return onNoMatch
+      val targets = insertTargets.fold(Array.empty[org.apache.spark.sql.Row])(
+        df => capped(df.select(out: _*), 256))
+      if (matched.length > 256 || targets.length > 256) return full()
+      val dirRel = hiveDirRel(partitionCols) _
+      val leafDirs = nested.map(rel => rel.take(rel.lastIndexOf('/'))).toSet
+      if (!matched.map(dirRel).toSet.subsetOf(leafDirs)) return full()
+      val tuples = (matched ++ targets).map(r => dirRel(r) -> r).toMap
+      if (tuples.size > 256) return full()
+      val prunePred = tuples.values.map { r =>
+        partitionCols.zipWithIndex.map { case (c, i) =>
+          val v = r.get(i)
+          if (v == null) col(c).isNull else col(c) <=> lit(v)
+        }.reduce(_ && _)
+      }.reduce(_ || _)
+      stageAndSwap(table, transform(read(table).filter(prunePred)),
+        (leafDirs -- tuples.keySet).toSeq ++ rootLevel, partitionCols)
+    }
   }
 
   /** A provably-EMPTY result in the table's effective schema. The pruned
@@ -1145,71 +1095,6 @@ final class TableStore(spark: SparkSession, root: String) {
     val reader = spark.read.option("basePath", tablePath(table))
     tableSchema(table).foreach(reader.schema)
     reader.parquet(rels.sorted.map(r => s"${tablePath(table)}/$r"): _*)
-  }
-
-  /** Copy-on-write rewrite of ONLY the hive partition directories holding
-    * rows that match `cond` — the cluster-scale CRUD path the class doc
-    * promises: a single-document cascade delete on a 16-bucket chunks
-    * table rewrites one directory, not sixteen, and an untouched
-    * directory's bytes are never read or written (pinned by
-    * `PrunedRewriteSpec` on file names+mtimes).
-    *
-    * Shape: one slim scan finds the affected partition values (cond
-    * columns + partition columns only — column-pruned at the parquet
-    * reader), the rewrite input is the partition-pruned scan of just
-    * those directories, and the commit is [[stageAndSwapWithKept]] with
-    * every UNAFFECTED leaf directory carried across as one whole-dir
-    * rename — table-level ALL-OR-NOTHING (same contract and failpoints
-    * as the file-level and compaction paths), O(#directories) metadata
-    * ops. Partition values are mapped to directory names with Spark's
-    * own hive escaping; the rendering is only proven for string /
-    * integral / boolean / date partition columns, and any other type —
-    * or an affected value whose rendered directory is not found on disk
-    * — falls back to the whole-table rewrite rather than risk a silent
-    * mismatch.
-    */
-  private def prunedRewrite(table: String, cond: Column,
-                            partitionCols: Seq[String])
-                           (transform: DataFrame => DataFrame): Unit = {
-    def full(): Unit = overwriteAtomic(table, transform(read(table)), partitionCols)
-    if (!partitionTypesRenderable(read(table).schema, partitionCols))
-      return full()
-    // raw cond (not coalesce-wrapped): filter drops NULLs anyway, and the
-    // raw predicate stays pushdown-translatable for stats skipping
-    val affected = read(table).filter(cond)
-      .select(partitionCols.map(col): _*).distinct().limit(257).collect()
-    if (affected.isEmpty) return // nothing matches: zero I/O, not a rewrite
-    // a predicate touching very many directories gains nothing from
-    // pruning and would bloat the partition filter — whole-table path
-    if (affected.length > 256) return full()
-
-    val affectedDirs = affected.map(hiveDirRel(partitionCols)).toSet
-
-    // leaf partition dirs actually on disk = parents of visible files;
-    // stray root-level files (foreign writers) are kept file-by-file
-    val visible = listVisibleFiles(table).map(_._1)
-    val leafDirs = visible.collect {
-      case rel if rel.contains('/') => rel.take(rel.lastIndexOf('/'))
-    }.toSet
-    // safety net for finding-class rendering bugs: every affected tuple
-    // MUST map to a directory that exists — else the swap below would
-    // silently drop or miss data
-    if (!affectedDirs.subsetOf(leafDirs)) return full()
-    val kept = (leafDirs -- affectedDirs).toSeq ++
-      visible.filterNot(_.contains('/'))
-
-    // partition-pruned input: OR over the affected value tuples, each a
-    // null-safe conjunction — lands in the scan's PartitionFilters, so
-    // unaffected directories are never opened (plan pinned in spec)
-    val prunePred = affected.map { r =>
-      partitionCols.zipWithIndex.map { case (c, i) =>
-        val v = r.get(i)
-        if (v == null) col(c).isNull else col(c) <=> lit(v)
-      }.reduce(_ && _)
-    }.reduce(_ || _)
-
-    stageAndSwapWithKept(table,
-      transform(read(table).filter(prunePred)), kept, partitionCols)
   }
 
   /** Maps an `input_file_name()` URI back to a path relative to the table
@@ -1435,15 +1320,8 @@ final class TableStore(spark: SparkSession, root: String) {
     * [[TableStore.ExecutorFooterThreshold]] files and run as one
     * executor-side job above it, same two-tier shape as [[footerMaxId]].
     */
-  def readRange(table: String, column: String, lo: Long, hi: Long): DataFrame = {
-    if (lo > hi) return emptyResult(table)
-    statsPrunedRead(table, col(column).between(lo, hi),
-      column, TableStore.IntegralUnit, {
-        case (0, _, _)   => true
-        case (2, mn, mx) => mx.toLong >= lo && mn.toLong <= hi
-        case _           => false
-      })
-  }
+  def readRange(table: String, column: String, lo: Long, hi: Long): DataFrame =
+    readRangeAll(table, Seq((column, lo, hi)))
 
   /** [[readRange]] for TIMESTAMP columns — the time-window scan an events
     * or crawl-log table answers constantly. Needs its own typed overload
@@ -1461,14 +1339,9 @@ final class TableStore(spark: SparkSession, root: String) {
                 lo: java.sql.Timestamp, hi: java.sql.Timestamp): DataFrame = {
     def micros(t: java.sql.Timestamp): Long =
       t.getTime * 1000L + (t.getNanos % 1000000L) / 1000L
-    if (lo.after(hi)) return emptyResult(table)
-    val (loU, hiU) = (micros(lo), micros(hi))
-    statsPrunedRead(table, col(column).between(lit(lo), lit(hi)),
-      column, TableStore.TimestampMicrosUnit, {
-        case (0, _, _)   => true
-        case (2, mn, mx) => mx.toLong >= loU && mn.toLong <= hiU
-        case _           => false
-      })
+    if (lo.after(hi)) emptyResult(table)
+    else statsPrunedReadMulti(table, col(column).between(lit(lo), lit(hi)),
+      Seq((column, TableStore.TimestampMicrosUnit, meetsBand(micros(lo), micros(hi)))))
   }
 
   /** Conjunctive stats-pruned read over SEVERAL integral ranges — the
@@ -1489,12 +1362,7 @@ final class TableStore(spark: SparkSession, root: String) {
       col(c).between(lo, hi)
     }.reduce(_ && _)
     statsPrunedReadMulti(table, rowFilter, ranges.map { case (c, lo, hi) =>
-      (c, TableStore.IntegralUnit,
-        (v: (Int, String, String)) => v match {
-          case (0, _, _)   => true
-          case (2, mn, mx) => mx.toLong >= lo && mn.toLong <= hi
-          case _           => false
-        })
+      (c, TableStore.IntegralUnit, meetsBand(lo, hi))
     })
   }
 
@@ -1509,22 +1377,8 @@ final class TableStore(spark: SparkSession, root: String) {
     * exactness rules as [[readRange]] (the IN row filter always applies;
     * IN is null-rejecting, so provably all-null files drop).
     */
-  def readIn(table: String, column: String, values: Seq[Long]): DataFrame = {
-    if (values.isEmpty) return emptyResult(table)
-    val sorted = values.distinct.sorted
-    val arr = sorted.toArray
-    statsPrunedRead(table, col(column).isInCollection(sorted),
-      column, TableStore.IntegralUnit, {
-        case (0, _, _) => true
-        case (2, mn, mx) =>
-          val lo = mn.toLong
-          val hi = mx.toLong
-          val i = java.util.Arrays.binarySearch(arr, lo)
-          val at = if (i >= 0) i else -i - 1 // first value >= lo
-          at < arr.length && arr(at) <= hi
-        case _ => false
-      })
-  }
+  def readIn(table: String, column: String, values: Seq[Long]): DataFrame =
+    readInAll(table, Seq((column, values)))
 
   /** Conjunctive point-SET read — [[readIn]]'s sibling of
     * [[readRangeAll]]: the table filtered to `AND_i (col_i IN values_i)`,
@@ -1541,21 +1395,10 @@ final class TableStore(spark: SparkSession, root: String) {
     if (conjuncts.exists(_._2.isEmpty))
       return emptyResult(table)
     val rowFilter = conjuncts.map { case (c, vs) =>
-      col(c).isInCollection(vs.distinct)
+      col(c).isInCollection(vs.distinct.sorted)
     }.reduce(_ && _)
     statsPrunedReadMulti(table, rowFilter, conjuncts.map { case (c, vs) =>
-      val arr = vs.distinct.sorted.toArray
-      (c, TableStore.IntegralUnit,
-        (v: (Int, String, String)) => v match {
-          case (0, _, _) => true
-          case (2, mn, mx) =>
-            val lo = mn.toLong
-            val hi = mx.toLong
-            val i = java.util.Arrays.binarySearch(arr, lo)
-            val at = if (i >= 0) i else -i - 1
-            at < arr.length && arr(at) <= hi
-          case _ => false
-        })
+      (c, TableStore.IntegralUnit, holdsAnyOf(vs.distinct.sorted.toIndexedSeq, _.toLong))
     })
   }
 
@@ -1570,25 +1413,14 @@ final class TableStore(spark: SparkSession, root: String) {
   def readInStrings(table: String, column: String, values: Seq[String]): DataFrame = {
     if (values.isEmpty) return emptyResult(table)
     val sorted = values.distinct.sorted
-    val arr: Array[Array[Byte]] = sorted
-      .map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toArray
+    // searched in BYTE order, which a String sort is not past U+D7FF
+    implicit val byteOrder: Ordering[Array[Byte]] =
+      Ordering.fromLessThan(TableStore.cmpBytes(_, _) < 0)
+    val keys = sorted.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .sorted.toIndexedSeq
     val dec = java.util.Base64.getUrlDecoder
-    statsPrunedRead(table, col(column).isInCollection(sorted),
-      column, TableStore.Utf8Unit, {
-        case (0, _, _) => true
-        case (2, mn, mx) =>
-          val lo = dec.decode(mn)
-          val hi = dec.decode(mx)
-          // first key >= lo (binary search over the sorted byte arrays)
-          var a = 0
-          var b = arr.length
-          while (a < b) {
-            val m = (a + b) >>> 1
-            if (TableStore.cmpBytes(arr(m), lo) < 0) a = m + 1 else b = m
-          }
-          a < arr.length && TableStore.cmpBytes(arr(a), hi) <= 0
-        case _ => false
-      })
+    statsPrunedReadMulti(table, col(column).isInCollection(sorted),
+      Seq((column, TableStore.Utf8Unit, holdsAnyOf(keys, dec.decode(_: String)))))
   }
 
   /** [[readRange]] for DATE columns — parquet stores DATE as INT32 days
@@ -1600,14 +1432,9 @@ final class TableStore(spark: SparkSession, root: String) {
   def readRange(table: String, column: String,
                 lo: java.sql.Date, hi: java.sql.Date): DataFrame = {
     def days(d: java.sql.Date): Long = d.toLocalDate.toEpochDay
-    if (lo.after(hi)) return emptyResult(table)
-    val (loD, hiD) = (days(lo), days(hi))
-    statsPrunedRead(table, col(column).between(lit(lo), lit(hi)),
-      column, TableStore.DateDaysUnit, {
-        case (0, _, _)   => true
-        case (2, mn, mx) => mx.toLong >= loD && mn.toLong <= hiD
-        case _           => false
-      })
+    if (lo.after(hi)) emptyResult(table)
+    else statsPrunedReadMulti(table, col(column).between(lit(lo), lit(hi)),
+      Seq((column, TableStore.DateDaysUnit, meetsBand(days(lo), days(hi)))))
   }
 
   /** [[readRange]]'s sibling for STRING keys: the table filtered to rows
@@ -1626,27 +1453,54 @@ final class TableStore(spark: SparkSession, root: String) {
     val pBytes = prefix.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     val upper = TableStore.nextPrefixBytes(pBytes)
     val dec = java.util.Base64.getUrlDecoder
-    statsPrunedRead(table, col(column).startsWith(prefix),
-      column, TableStore.Utf8Unit, {
-        case (0, _, _) => true
-        case (2, mn, mx) =>
-          TableStore.cmpBytes(dec.decode(mx), pBytes) >= 0 &&
-            upper.forall(u => TableStore.cmpBytes(dec.decode(mn), u) < 0)
-        case _ => false
-      })
+    statsPrunedReadMulti(table, col(column).startsWith(prefix),
+      Seq((column, TableStore.Utf8Unit, inBand { (mn, mx) =>
+        TableStore.cmpBytes(dec.decode(mx), pBytes) >= 0 &&
+          upper.forall(u => TableStore.cmpBytes(dec.decode(mn), u) < 0)
+      })))
   }
 
-  /** Shared scaffolding of the stats-pruned reads ([[readRange]] thrice,
-    * [[readPrefix]]): list visible files, bail to the plain filtered
-    * read when any visible file is not parquet (the fallback scan would
-    * read it as data — footers can't answer for it), resolve each file's
-    * verdict — from the STATS MANIFEST when a validated entry exists,
-    * live footers otherwise — keep the files `keepVerdict` accepts
-    * (every caller encodes "unusable → keep", which is what makes the
-    * reads unconditionally exact; a verdict that fails to DECODE is also
-    * kept), and re-read just those under `basePath` with the row filter
-    * applied. ONE copy of the conservative-keep rules — a fix lands
-    * once, not three times.
+  /** A file's canonical footer verdict `(code, min, max)` — code 0: the
+    * statistics are unusable, so the file is KEPT and scanned (what makes
+    * every pruned read unconditionally exact); code 2: `band(min, max)`
+    * decides; any other code (a provably all-null file) drops, since
+    * every pruned read's row filter is null-rejecting.
+    */
+  private def inBand(band: (String, String) => Boolean)
+                    (v: (Int, String, String)): Boolean = v match {
+    case (0, _, _)   => true
+    case (2, mn, mx) => band(mn, mx)
+    case _           => false
+  }
+
+  /** [[inBand]] keeping a file whose band holds at least one of the
+    * sorted distinct `keys`: a binary search per file, O(log k) — on a
+    * clustered layout k scattered keys plan O(k) files, not the table.
+    */
+  private def holdsAnyOf[K](keys: IndexedSeq[K], decode: String => K)
+                           (implicit ord: Ordering[K]): ((Int, String, String)) => Boolean =
+    inBand { (mn, mx) =>
+      val at = keys.search(decode(mn)).insertionPoint // first key >= the band's min
+      at < keys.length && ord.lteq(keys(at), decode(mx))
+    }
+
+  /** [[inBand]] for an inclusive range over Long-decoded bounds. */
+  private def meetsBand(lo: Long, hi: Long): ((Int, String, String)) => Boolean =
+    inBand((mn, mx) => mx.toLong >= lo && mn.toLong <= hi)
+
+  /** The one stats-pruned read behind [[readRange]], [[readIn]],
+    * [[readPrefix]] and their conjunctive forms: list visible files, bail
+    * to the plain filtered read when any visible file is not parquet (the
+    * fallback scan would read it as data — footers can't answer for it),
+    * resolve each file's verdict per spec — from its partition directory
+    * name, from the STATS MANIFEST when a validated entry exists, live
+    * footers otherwise — keep the files every spec's [[inBand]] test
+    * accepts (a verdict that fails to DECODE is also kept), and re-read
+    * just those under `basePath` with the row filter applied. A file
+    * proved disjoint from ANY conjunct can hold no matching row, because
+    * the row filter is the conjunction of the specs' predicates. Every
+    * miss file pays ONE footer open for ALL specs (the k-conjunct read
+    * must not cost k footer passes) and ONE manifest parse total.
     *
     * Scale note: without the manifest every pruned read pays an
     * O(#files) footer-metadata pass (bounded, two-tier, but PER QUERY).
@@ -1654,18 +1508,6 @@ final class TableStore(spark: SparkSession, root: String) {
     * compacted bulk answers from one sidecar read and only the
     * fresh-append tail is read live — the same O(new tail) discipline
     * the storage layer applies everywhere else.
-    */
-  private def statsPrunedRead(table: String, rowFilter: Column,
-      column: String, unit: TableStore.StatsUnit,
-      keepVerdict: ((Int, String, String)) => Boolean): DataFrame =
-    statsPrunedReadMulti(table, rowFilter, Seq((column, unit, keepVerdict)))
-
-  /** The conjunctive form: a file survives only if EVERY spec keeps it —
-    * correct because the row filter is the conjunction of the specs'
-    * predicates, so a file proved disjoint from ANY conjunct can hold no
-    * matching row. Verdicts resolve manifest-first, and every miss file
-    * pays ONE footer open for ALL specs (the k-conjunct read must not
-    * cost k footer passes) and ONE manifest parse total.
     */
   private def statsPrunedReadMulti(table: String, rowFilter: Column,
       specs: Seq[(String, TableStore.StatsUnit,
@@ -1968,15 +1810,14 @@ final class TableStore(spark: SparkSession, root: String) {
     * its file crosses the threshold and is never touched again,
     * independent of corpus size.
     *
-    * Commit discipline is the [[overwriteAtomic]] two-rename swap, with
-    * the kept files moved (not copied) into the staged directory inside
-    * the swap window: packed replacements are fully written to `.tmp-*`
-    * while the table is still live, then dest→old, kept files old→tmp
-    * (renames), tmp→dest. A crash before dest→old leaves the table
-    * fully-old; after tmp→dest, fully-new; inside the window the table
-    * path is transiently absent (exactly like [[overwriteAtomic]] — the
-    * single-writer contract) and every byte remains recoverable in the
-    * `.old-*`/`.tmp-*` siblings, since renames never destroy data.
+    * Commit is [[stageAndSwap]], with the kept files moved (not copied)
+    * into the staged directory inside the swap window: packed
+    * replacements are fully written to `.tmp-*` while the table is still
+    * live, then dest→old, kept files old→tmp (renames), tmp→dest. A crash
+    * before dest→old leaves the table fully-old; after tmp→dest,
+    * fully-new; inside the window the table path is transiently absent
+    * (the single-writer contract) and every byte remains recoverable in
+    * the `.old-*`/`.tmp-*` siblings, since renames never destroy data.
     *
     * Partitioned tables: small files are read with `basePath` so hive
     * partition values survive, and the packed subset is hash-distributed
@@ -2043,7 +1884,7 @@ final class TableStore(spark: SparkSession, root: String) {
         val dist = packedSrc.repartition(n, partitionCols.map(col): _*)
         if (sc.isEmpty) dist else dist.sortWithinPartitions(sc: _*)
       }
-    stageAndSwapWithKept(table, packed, kept.map(_._1), partitionCols)
+    stageAndSwap(table, packed, kept.map(_._1), partitionCols)
     // the swap drops the (file-identity-keyed) stats manifest by design;
     // compaction is the cadence that reshapes the file set, so it is
     // also the cadence that rebuilds the manifest — no-op undeclared
@@ -2051,19 +1892,21 @@ final class TableStore(spark: SparkSession, root: String) {
     CompactStats(small.size, smallBytes, kept.size)
   }
 
-  /** Shared commit for the partial-rewrite paths ([[compactIncremental]],
-    * the file-pruned CRUD rewrite): stage `df` as the table's NEW content
-    * in a `.tmp-*` sibling while the table stays live, then commit with
-    * the two-rename swap, carrying every `keptRels` file across by a
-    * metadata-only rename inside the window — zero data I/O for
-    * carried-over bytes, and the table-level all-or-nothing contract of
-    * [[overwriteAtomic]] (fully-old before the window, fully-new after;
-    * transiently absent inside it; every byte recoverable from the
-    * `.old-*`/`.tmp-*` siblings on a mid-window crash).
+  /** The one swap commit behind every rewrite ([[overwriteAtomic]],
+    * [[compactIncremental]], the slice rewrite of the row mutations):
+    * stage `df` as the table's NEW content in a `.tmp-*` sibling while the
+    * table stays live, then commit with the two-rename swap, carrying
+    * every `keptRels` file or directory across by a metadata-only rename
+    * inside the window — zero data I/O for carried-over bytes. Fully-old
+    * before the window, fully-new after it; transiently absent inside it,
+    * with every byte recoverable from the `.old-*`/`.tmp-*` siblings on a
+    * mid-window crash ([[recoverSwapDebris]]). A table that does not
+    * exist yet is committed by the single tmp→dest rename, which is only
+    * sound when nothing is kept.
     */
-  private def stageAndSwapWithKept(table: String, df: DataFrame,
-                                   keptRels: Seq[String],
-                                   partitionCols: Seq[String]): Unit = {
+  private def stageAndSwap(table: String, df: DataFrame,
+                           keptRels: Seq[String],
+                           partitionCols: Seq[String]): Unit = {
     // the single-writer gate: EVERY swap path (overwrite, compaction,
     // pruned CRUD, merge) funnels through here, so one check covers all
     checkNoForeignLease(table, "atomic swap")
@@ -2071,11 +1914,12 @@ final class TableStore(spark: SparkSession, root: String) {
     val dest = new Path(tablePath(table))
     val tmp = new Path(tablePath(table) + s".tmp-${System.nanoTime()}")
     val old = new Path(tablePath(table) + s".old-${System.nanoTime()}")
-    // empty partitioned writes produce no files (schema lost) — same
-    // fallback as overwriteAtomic, but ONLY when nothing is carried over:
-    // with kept directories the table stays readable from them, and a
-    // root-level marker file next to hive dirs would break partition
-    // discovery
+    // an empty partitioned write produces no files at all (schema lost):
+    // fall back to one empty unpartitioned file, which preserves schema
+    // (appendPartitioned clears it before the next partitioned append) —
+    // but ONLY when nothing is carried over: with kept directories the
+    // table stays readable from them, and a root-level marker file next
+    // to hive dirs would break partition discovery
     val effectiveParts =
       if (partitionCols.nonEmpty && keptRels.isEmpty && df.isEmpty) Nil
       else partitionCols
@@ -2111,8 +1955,10 @@ final class TableStore(spark: SparkSession, root: String) {
     // either moved into tmp (→ roll forward) or still in old (→ roll back)
     writeSwapMarkers(tmp, keptRels)
     failpoint("tmp-written")
-    if (!f.rename(dest, old))
-      throw new java.io.IOException(s"partial-rewrite swap failed for $table")
+    // first-ever write: nothing to set aside (kept files need a table)
+    val fresh = keptRels.isEmpty && !f.exists(dest)
+    if (!fresh && !f.rename(dest, old))
+      throw new java.io.IOException(s"swap failed for $table")
     failpoint("old-aside")
     // carry untouched files/dirs across: O(1) metadata renames, no I/O.
     // Staged part files carry a fresh job UUID, so names cannot collide.
@@ -2142,7 +1988,7 @@ final class TableStore(spark: SparkSession, root: String) {
       // best-effort rollback: return kept files, restore the old dir
       for (rel <- keptRels) f.rename(new Path(tmp, rel), new Path(old, rel))
       f.rename(old, dest)
-      throw new java.io.IOException(s"partial-rewrite swap failed for $table")
+      throw new java.io.IOException(s"swap failed for $table")
     }
     failpoint("swapped")
     f.delete(old, true)
@@ -2183,7 +2029,7 @@ final class TableStore(spark: SparkSession, root: String) {
       .map(_.split("\n").toSeq.map(_.trim).filter(_.nonEmpty)).getOrElse(Nil)
 
   /** Automated recovery from a crashed atomic swap (any commit path:
-    * [[overwriteAtomic]], compaction, file-/partition-pruned CRUD).
+    * [[overwriteAtomic]], compaction, the slice rewrite of the row mutations).
     * Inspects the table's `.old-*`/`.tmp-*` siblings, restores a
     * consistent FULLY-OLD or FULLY-NEW table, and deletes the debris —
     * the file-engine replacement for the reference's transactional

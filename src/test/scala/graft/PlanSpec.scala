@@ -196,7 +196,7 @@ class PlanSpec extends AnyFunSuite with SharedSpark {
     val emb = Tables.load(spark, sf, "embeddings")
     val p = plan(graft.ext.Similarity.knnJoin(emb, "vec_id", "embedding",
       "label", 3)).split("== Initial Plan ==")(0)
-    // the r4→r5 regression class this pins: cosineAuto must resolve to the
+    // the r4→r5 regression class this pins: cosineNative must resolve to the
     // native codegen expression (not the interpreted HOF fallback), the
     // block self-join must stay an equi-join (broadcast at this scale),
     // and the ONLY hash exchange is the top-k aggregation's — with a

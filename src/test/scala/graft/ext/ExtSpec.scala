@@ -101,7 +101,7 @@ class ExtSpec extends AnyFunSuite with SharedSpark {
         col("embedding").cast("array<double>").as("qv"), col("label").as("ql")))
       .filter(col("cl") =!= col("ql"))
       .select(col("query_id"), col("id"),
-        round(Similarity.cosineAuto(spark, col("cv"), col("qv")), 6).as("cos"))
+        round(Similarity.cosineNative(col("cv"), col("qv")), 6).as("cos"))
     val ref = scored.withColumn("rn", row_number().over(
         Window.partitionBy("query_id").orderBy(col("cos").desc, col("id"))))
       .filter(col("rn") <= 8).drop("rn")
@@ -291,14 +291,11 @@ class ExtSpec extends AnyFunSuite with SharedSpark {
       .filter(col("count") > 3).count() == 0) // never more than k
   }
 
-  test("cosineNearDupPairs matches on a vanilla SparkSession (no extensions)") {
+  test("cosineNearDupPairs on a vanilla SparkSession fails fast, naming GraftExtensions") {
     import org.apache.spark.sql.SparkSession
-    val expected = Dedup.cosineNearDupPairs(embs, "vec_id", "embedding",
-      "label", 0.2).orderBy("id_a", "id_b")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     // a second session over the same SparkContext but built WITHOUT
-    // GraftExtensions: cosineAuto must fall back to the expression form
-    // and produce bit-identical scores
+    // GraftExtensions: the engine refuses it up front, with a message
+    // that names the fix, instead of Spark's unresolved-routine error
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     try {
@@ -308,11 +305,14 @@ class ExtSpec extends AnyFunSuite with SharedSpark {
         .getOrCreate()
       assert(!vanilla.catalog.functionExists("graft_cosine"),
         "vanilla session unexpectedly has the native function registered")
-      val got = Dedup.cosineNearDupPairs(
-        vanilla.read.parquet(s"$sf/embeddings.parquet"),
-        "vec_id", "embedding", "label", 0.2).orderBy("id_a", "id_b")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-      assert(got == expected)
+      val e = intercept[IllegalStateException] {
+        Dedup.cosineNearDupPairs(
+          vanilla.read.parquet(s"$sf/embeddings.parquet"),
+          "vec_id", "embedding", "label", 0.2)
+      }
+      assert(e.getMessage.contains("graft.GraftSession"), e.getMessage)
+      assert(e.getMessage.contains(
+        "spark.sql.extensions=graft.functions.GraftExtensions"), e.getMessage)
     } finally {
       // the vanilla session shares the JVM-wide SparkContext — never stop
       // it; just restore the suite session as default/active

@@ -79,7 +79,7 @@ class FunctionsSpec extends AnyFunSuite with SharedSpark {
     assert(math.abs(r.getDouble(0) - 1.0) < 1e-9 && r.getDouble(0) == r.getDouble(1))
   }
 
-  test("typed top-k fallback and minhash union skip null inputs like SQL aggregates") {
+  test("native top-k and minhash union skip null inputs like SQL aggregates") {
     import spark.implicits._
     val scored = Seq(
       (1L, Option(10L), Option(0.5)),
@@ -88,7 +88,7 @@ class FunctionsSpec extends AnyFunSuite with SharedSpark {
       (1L, Option(12L), Option(0.8)))
       .toDF("g", "id", "score")
     val top = scored.groupBy("g")
-      .agg(TopKByScore.topKByScore(col("id"), col("score"), 2).as("nn"))
+      .agg(call_function("graft_topk_by_score", col("id"), col("score"), lit(2)).as("nn"))
       .select(explode(col("nn")).as("n")).select("n.id").as[Long].collect().toSeq
     assert(top == Seq(12L, 10L))
     val sig = Seq((1, Option("a b c d e")), (1, Option.empty[String]))
@@ -135,7 +135,7 @@ class FunctionsSpec extends AnyFunSuite with SharedSpark {
   test("graft_topk_by_score ranks NaN scores strictly last, deterministically") {
     import spark.implicits._
     // a NaN must never displace a real neighbour, whatever the arrival
-    // order — both the native aggregate and the typed fallback
+    // order
     val rows = Seq((1L, 10L, Double.NaN), (1L, 11L, 0.2), (1L, 12L, 0.9),
       (1L, 13L, Double.NaN), (1L, 14L, 0.5)).toDF("g", "item", "score")
       .repartition(5) // spread so merge order varies
@@ -145,12 +145,13 @@ class FunctionsSpec extends AnyFunSuite with SharedSpark {
       .select(explode(col("nn")).as("n")).select("n.id")
       .as[Long].collect().toSeq
     assert(native == Seq(12L, 14L, 11L), s"got $native")
-    val fallback = rows.groupBy("g")
-      .agg(graft.functions.TopKByScore
-        .topKByScore(col("item"), col("score"), 3).as("nn"))
+    // the same rows arriving NaN-first in one partition
+    val nanFirst = rows.orderBy(col("score").desc).coalesce(1).groupBy("g")
+      .agg(call_function("graft_topk_by_score",
+        col("item"), col("score"), lit(3)).as("nn"))
       .select(explode(col("nn")).as("n")).select("n.id")
       .as[Long].collect().toSeq
-    assert(fallback == Seq(12L, 14L, 11L), s"got $fallback")
+    assert(nanFirst == Seq(12L, 14L, 11L), s"got $nanFirst")
     // with fewer reals than k, NaNs fill the tail in id order
     val tail = rows.filter(col("item") =!= 11L && col("item") =!= 14L)
       .groupBy("g")

@@ -83,6 +83,23 @@ class PrunedRewriteSpec extends AnyFunSuite with SharedSpark {
     assert(ts.read("t").count() == 400)
   }
 
+  test("a flat-on-disk table addressed with partitionCols converges to hive directories") {
+    import spark.implicits._
+    val root = tmpDir("tables")
+    val ts = new TableStore(spark, root)
+    ts.append("t", (1L to 100L).map(i => (i, i % 4, s"v$i")).toDF("id", "bucket", "v"))
+    // root-level parquet under a partitioned address takes the whole-table
+    // rewrite before any discovery — even for a predicate matching nothing
+    // (the rule merge already followed) — and that rewrite lays the table
+    // out by bucket, so the next mutation can prune
+    ts.deleteWhere("t", col("id") === -42L, partitionCols = Seq("bucket"))
+    assert(bucketFiles(root, "t").keySet == (0 to 3).map(b => s"bucket=$b").toSet)
+    assert(!new java.io.File(s"$root/t").listFiles()
+      .exists(f => f.isFile && f.getName.endsWith(".parquet")),
+      "no root-level parquet may survive next to the bucket directories")
+    assert(ts.read("t").count() == 100)
+  }
+
   test("NULL-valued predicates keep rows, pruned like the whole-table path") {
     import spark.implicits._
     val root = tmpDir("tables")
@@ -144,7 +161,7 @@ class PrunedRewriteSpec extends AnyFunSuite with SharedSpark {
 
   test("the affected-values predicate lands in PartitionFilters, not DataFilters") {
     import spark.implicits._
-    // the predicate shape prunedRewrite builds — null-safe conjunctions
+    // the predicate shape rewriteSlice builds — null-safe conjunctions
     // OR'd per affected tuple — must prune at the partition level, or the
     // 'unaffected directories are never read' claim silently degrades to
     // a full scan with a post-filter
@@ -164,7 +181,7 @@ class PrunedRewriteSpec extends AnyFunSuite with SharedSpark {
     final class Boom extends RuntimeException("injected crash")
     val allIds = (1L to 400L).toSet
     // the same shared failpoints as the compaction / file-level paths:
-    // the partitioned rewrite commits through stageAndSwapWithKept, so a
+    // the partitioned rewrite commits through stageAndSwap, so a
     // mid-window crash leaves the TABLE PATH absent (loud, retryable) —
     // never a readable table silently missing one partition directory
     for (crashAt <- Seq("tmp-written", "old-aside", "kept-moved", "swapped")) {

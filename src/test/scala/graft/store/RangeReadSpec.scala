@@ -271,6 +271,22 @@ class RangeReadSpec extends AnyFunSuite with SharedSpark {
     }
   }
 
+  test("readInStrings finds keys whose UTF-16 and UTF-8 orders disagree") {
+    import spark.implicits._
+    // U+FF01 sorts AFTER a surrogate pair as a Java string but BEFORE it
+    // as UTF-8 bytes; the per-file binary search must run in byte order,
+    // or the U+FF01 file is proved "disjoint" and its row silently lost
+    val root = tmpDir("range-instr-surrogate")
+    val ts = new TableStore(spark, root)
+    ts.append("t", Seq(("\uFF01", 1)).toDF("key", "v").coalesce(1))
+    ts.append("t", Seq(("\uD83D\uDE00", 2)).toDF("key", "v").coalesce(1))
+    ts.append("t", Seq(("a", 3)).toDF("key", "v").coalesce(1))
+    val got = ts.readInStrings("t", "key", Seq("\uFF01", "\uD83D\uDE00"))
+    assert(got.as[(String, Int)].collect().toSet ==
+      Set(("\uFF01", 1), ("\uD83D\uDE00", 2)))
+    assert(got.inputFiles.length == 2, "the 'a' file must be pruned")
+  }
+
   test("timestamp range read prunes time-clustered files, micro-exact") {
     import spark.implicits._
     import java.sql.Timestamp

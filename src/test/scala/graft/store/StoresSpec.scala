@@ -78,7 +78,7 @@ class StoresSpec extends AnyFunSuite with SharedSpark {
     final class Boom extends RuntimeException("injected crash")
     // one fresh store per crash point: a stranded .tmp-/.old- sibling from
     // an earlier injection must not leak into the next scenario
-    for (crashAt <- Seq("tmp-written", "old-aside", "swapped")) {
+    for (crashAt <- Seq("tmp-written", "old-aside", "kept-moved", "swapped")) {
       val root = tmpDir(s"tables-crash-$crashAt")
       val ts = new TableStore(spark, root)
       ts.append("t", oldRows.toSeq.toDF("id", "v"))
@@ -95,7 +95,7 @@ class StoresSpec extends AnyFunSuite with SharedSpark {
           // untouched; the half-committed data sits only in .tmp-*
           assert(snapshot(ts) == oldRows, s"[$crashAt] expected all-old")
           assert(ts.getTableProp("t", "buckets").contains("16"))
-        case "old-aside" =>
+        case "old-aside" | "kept-moved" =>
           // inside the two-rename window: the table path is ABSENT (a
           // retryable read failure, per the scaladoc), and the complete
           // old table — props included — is recoverable in .old-*

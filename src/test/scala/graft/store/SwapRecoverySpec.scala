@@ -38,7 +38,7 @@ class SwapRecoverySpec extends AnyFunSuite with SharedSpark {
     import spark.implicits._
     val oldRows = Set((1L, "a"), (2L, "b"))
     val newRows = Set((10L, "x"), (11L, "y"))
-    for (crashAt <- Seq("tmp-written", "old-aside", "swapped")) {
+    for (crashAt <- Seq("tmp-written", "old-aside", "kept-moved", "swapped")) {
       val root = tmpDir(s"rec-ow-$crashAt")
       val ts = new TableStore(spark, root)
       ts.append("t", oldRows.toSeq.toDF("id", "v"))
@@ -53,7 +53,7 @@ class SwapRecoverySpec extends AnyFunSuite with SharedSpark {
         case "tmp-written" => // table was live: debris dropped, fully-old
           assert(outcome == SwapRecovery.CleanedUp)
           assert(got == oldRows, s"[$crashAt]")
-        case "old-aside" => // staged dir provably complete: committed
+        case "old-aside" | "kept-moved" => // staged dir provably complete: committed
           assert(outcome == SwapRecovery.RolledForward)
           assert(got == newRows, s"[$crashAt]")
         case "swapped" => // commit point passed: stale .old-* dropped
@@ -68,18 +68,23 @@ class SwapRecoverySpec extends AnyFunSuite with SharedSpark {
 
   test("first-ever write crash (no prior table) rolls forward") {
     import spark.implicits._
-    val root = tmpDir("rec-first")
-    val ts = new TableStore(spark, root)
-    ts.failpoint = at => if (at == "tmp-written") throw new Boom
-    intercept[Boom] {
-      ts.overwriteAtomic("t", Seq((1L, "a")).toDF("id", "v"))
+    // before the window and inside it: with no table to set aside, the
+    // commit is the lone tmp→dest rename, so only the staged dir exists
+    for (crashAt <- Seq("tmp-written", "old-aside")) {
+      val root = tmpDir(s"rec-first-$crashAt")
+      val ts = new TableStore(spark, root)
+      ts.failpoint = at => if (at == crashAt) throw new Boom
+      intercept[Boom] {
+        ts.overwriteAtomic("t", Seq((1L, "a")).toDF("id", "v"))
+      }
+      ts.failpoint = _ => ()
+      assert(!ts.exists("t"))
+      assert(siblings(root, "t").forall(_.startsWith("t.tmp-")), s"[$crashAt]")
+      // the staged dir is complete and nothing older exists — commit it
+      assert(ts.recoverSwapDebris("t") == SwapRecovery.RolledForward, s"[$crashAt]")
+      assert(ts.read("t").as[(Long, String)].collect().toSet == Set((1L, "a")))
+      assertClean(ts, root, "t")
     }
-    ts.failpoint = _ => ()
-    assert(!ts.exists("t"))
-    // the staged dir is complete and nothing older exists — commit it
-    assert(ts.recoverSwapDebris("t") == SwapRecovery.RolledForward)
-    assert(ts.read("t").as[(Long, String)].collect().toSet == Set((1L, "a")))
-    assertClean(ts, root, "t")
   }
 
   test("compaction crash at every failpoint recovers losslessly") {
