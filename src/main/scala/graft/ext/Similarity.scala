@@ -18,11 +18,13 @@ object Similarity {
     * declared bound — counting stops at cap+1 (limit-pushed), so the
     * check costs O(cap) even against a corpus-sized frame, instead of
     * letting the broadcast become an executor OOM or a de-facto
-    * cartesian join.
+    * cartesian join. The rows are collected (zero columns each) rather
+    * than counted: a count over the limit would put the limit inside a
+    * whole-stage-codegen stage, whose code is compiled afresh per call.
     */
   private def requireDriverBounded(frame: DataFrame, cap: Int,
                                    op: String): Unit = {
-    val n = frame.limit(cap + 1).count()
+    val n = frame.select().limit(cap + 1).collect().length
     require(n <= cap,
       s"$op broadcasts its query/anchor frame, which has > $cap rows — " +
         "this would be a broadcast OOM or a de-facto cartesian at corpus " +

@@ -107,10 +107,12 @@ object DeltaExport {
     val manifestPath = new org.apache.hadoop.fs.Path(rootPath,
       ExportIntegrity.ManifestName)
     if (fs.exists(deltaDir)) {
+      // isEmpty puts its limit at the top of the plan: a limit under a
+      // count would land inside a codegen stage and compile per call
       val published = fs.exists(manifestPath) &&
-        ExportIntegrity.readManifest(spark, root)
+        !ExportIntegrity.readManifest(spark, root)
           .filter(col("file").startsWith(incrementName + "/"))
-          .limit(1).count() > 0
+          .isEmpty
       if (published)
         throw new IllegalStateException(
           s"increment '$incrementName' is already published under $root — " +

@@ -40,14 +40,11 @@ import graft.store.{ObjectStore, TableStore}
   * `enumerate` (repository.py:28) and counters (pdf_parser.py:137-138).
   * The only shuffles in the whole job are the bucket exchanges of the
   * dense-id assignment (GlobalOrder.denseIds — literal-boundary buckets
-  * ranked by per-bucket windows, never a single-partition window), and
-  * they disappear entirely under `idStrategy="hash"` — the
-  * configuration a 100 TB corpus would run (SURVEY §7.4.2 parity note).
+  * ranked by per-bucket windows, never a single-partition window).
   */
 final case class ProcessingConfig(
     chunker: ChunkerConfig = ChunkerConfig(),
     imageScale: Double = 2.0, // pdf_parser.py:30
-    idStrategy: String = "dense", // "dense" = reference parity; "hash" = shuffle-free
     // number of hash buckets partitioning document_chunks by document_id
     // (SURVEY §7.4.7); chunk reads prune to one bucket
     chunkBuckets: Int = 16,
@@ -514,14 +511,8 @@ final class IngestPipeline(
       // inside whichever table write happens to evaluate the cache first;
       // every downstream append reads the cached blocks.
       val (docsWithId, docStats) = timed("ids_docs") {
-        val baseDocId =
-          if (cfg.idStrategy == "dense") tables.maxId("documents", "id") else 0L
-        val df =
-          if (cfg.idStrategy == "dense")
-            graft.ops.GlobalOrder.denseIds(parsed.toDF(),
-              Seq(col("doc.path")), "id", baseDocId)
-          else parsed.toDF()
-            .withColumn("id", pmod(xxhash64(col("doc.path")), lit(Long.MaxValue)))
+        val df = graft.ops.GlobalOrder.denseIds(parsed.toDF(),
+          Seq(col("doc.path")), "id", tables.maxId("documents", "id"))
         df.persist()
         toUnpersist += df
         val stats = df
@@ -551,8 +542,7 @@ final class IngestPipeline(
       // inside the chunk-id phase so its cost is attributed, not smeared
       // into a neighboring write.
       val chunkRows = timed("ids_chunks") {
-        val baseChunkId =
-          if (cfg.idStrategy == "dense") tables.maxId("document_chunks", "id") else 0L
+        val baseChunkId = tables.maxId("document_chunks", "id")
         val chunkCols = docsWithId
           .select(col("id").as("document_id"), explode(col("chunks")).as("c"))
           .select(
@@ -562,11 +552,8 @@ final class IngestPipeline(
             to_json(col("c.entities")).as("entities"),
             to_json(struct(col("c.tokenCount").as("token_count"))).as("chunk_metadata"),
             nowLit.as("created_at"))
-        (if (cfg.idStrategy == "dense")
-          graft.ops.GlobalOrder.denseIds(chunkCols,
-            Seq(col("document_id"), col("chunk_index")), "id", baseChunkId)
-        else chunkCols.withColumn("id",
-          pmod(xxhash64(col("document_id"), col("chunk_index")), lit(Long.MaxValue))))
+        graft.ops.GlobalOrder.denseIds(chunkCols,
+          Seq(col("document_id"), col("chunk_index")), "id", baseChunkId)
           .select("id", "document_id", "chunk_index", "text_content",
             "entities", "chunk_metadata", "created_at")
           .withColumn("doc_bucket",
@@ -593,16 +580,9 @@ final class IngestPipeline(
           .toDF("document_id", "chart_type", "type_index", "level", "caption", "png")
           .localCheckpoint()
         toUnpersist += chartPayloads
-        val baseChartId =
-          if (cfg.idStrategy == "dense") tables.maxId("chart_data", "id") else 0L
-        val df =
-          (if (cfg.idStrategy == "dense")
-            graft.ops.GlobalOrder.denseIds(chartPayloads,
-              Seq(col("document_id"), col("chart_type"), col("type_index")),
-              "id", baseChartId)
-          else chartPayloads.withColumn("id",
-            pmod(xxhash64(col("document_id"), col("chart_type"),
-              col("type_index")), lit(Long.MaxValue))))
+        val df = graft.ops.GlobalOrder.denseIds(chartPayloads,
+          Seq(col("document_id"), col("chart_type"), col("type_index")),
+          "id", tables.maxId("chart_data", "id"))
           .withColumn("image_path",
             format_string("documents/%d/charts/%d.png", col("document_id"), col("id")))
         df.persist()

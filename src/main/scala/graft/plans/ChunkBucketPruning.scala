@@ -4,7 +4,10 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{And, Attribute, Cast, EqualTo, Expression, Literal, Pmod, PredicateHelper, XxHash64}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types.{IntegerType, LongType}
+
+import graft.store.TableStore
 
 /** Optimizer rule (SURVEY §4.2 optional custom `Rule[LogicalPlan]`):
   * whenever a plan filters a chunk-shaped relation (one that carries the
@@ -17,56 +20,25 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   * without knowing the bucketing convention. Idempotent: skips filters
   * that already mention doc_bucket.
   *
-  * Bucket count comes from `spark.graft.chunkBuckets` (default 16) and
-  * must match the ingest configuration.
+  * Bucket count comes from the table's `buckets` prop, else from
+  * `spark.graft.chunkBuckets` (default 16), which must then match the
+  * ingest configuration.
   */
 class ChunkBucketPruning(spark: SparkSession)
   extends Rule[LogicalPlan] with PredicateHelper {
 
-  // bucket count per table root, resolved from the `_graft_buckets`
-  // marker the ingest writes next to the data (conf is the fallback).
-  // Present markers are cached with a TTL: the convention normally never
-  // changes, but a full-table re-bucket rewrites the marker, and a live
-  // session pruning with the stale count would silently filter out every
-  // row — the TTL bounds that exposure to seconds at the cost of one tiny
-  // sidecar read per table per TTL window.
-  // same knob as DocumentStore's marker cache, so one conf governs every
-  // stale-marker exposure window in the session
-  private def markerTtlNanos: Long =
-    spark.conf.get("spark.graft.bucketMarkerTtlMs", "30000").toLong * 1000000L
-  private val markerCache =
-    scala.collection.concurrent.TrieMap.empty[String, (Option[Long], Long)]
-
-  private def markerBuckets(plan: LogicalPlan): Option[Long] =
-    plan.collectFirst {
-      case rel: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        rel.relation match {
-          case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            h.location.rootPaths.headOption.flatMap { root =>
-              // cache only present markers (with TTL): absence is never
-              // cached — a marker may appear after the first ingest into
-              // this path, and the pre-ingest miss is the cheap case
-              val now = System.nanoTime()
-              markerCache.get(root.toString)
-                .collect { case (v, at) if now - at < markerTtlNanos => v }
-                .getOrElse {
-                  val found =
-                    try graft.store.Sidecar.read(
-                      new org.apache.hadoop.fs.Path(root, "_graft_buckets"),
-                      spark.sparkContext.hadoopConfiguration).map(_.toLong)
-                    catch { case _: Exception => None }
-                  if (found.isDefined)
-                    markerCache.put(root.toString, (found, now))
-                  found
-                }
-            }
-          case _ => None
-        }
-    }.flatten
-
+  // the scanned table's `buckets` prop (the `_graft_buckets` marker the
+  // ingest writes next to the data), read from its version-checked
+  // snapshot so a re-bucket prunes with the new modulus from the next
+  // plan on; conf is the fallback
   private def buckets(child: LogicalPlan): Long =
-    markerBuckets(child).getOrElse(
-      spark.conf.get("spark.graft.chunkBuckets", "16").toLong)
+    child.collectFirst { case rel: LogicalRelation => rel.relation }
+      .collect { case h: HadoopFsRelation => h.location.rootPaths }
+      .flatMap(_.headOption)
+      .flatMap(root =>
+        try TableStore.snapshotAt(spark, root).flatMap(_.props.get("buckets"))
+        catch { case _: Exception => None })
+      .fold(spark.conf.get("spark.graft.chunkBuckets", "16").toLong)(_.toLong)
 
   /** A document_id equality that constrains the WHOLE filter — i.e. it is
     * one of the top-level conjuncts. An equality nested under Not/Or must

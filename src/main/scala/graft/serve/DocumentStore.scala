@@ -43,30 +43,14 @@ final class DocumentStore(
     objects: ObjectStore) {
 
   /** Bucket count travels with the table (`_graft_buckets` marker written
-    * at ingest); session conf is the fallback for marker-less tables.
-    * The marker is write-once per APPEND lifetime, but a full-table
-    * REWRITE under a new modulus is a legitimate operation — so a found
-    * marker is cached with a TTL (`spark.graft.bucketMarkerTtlMs`,
-    * default 30 s), not forever: the hot serving path amortizes the
-    * sidecar read (on an object store that is metadata round-trips per
-    * GET) while a re-bucket during server lifetime is picked up within
-    * one TTL window instead of pruning against the dead modulus and
-    * returning silently empty results. Until a marker exists
-    * (pre-first-batch), every call re-checks so the store picks the
-    * marker up the moment ingest writes it.
+    * at ingest), read from the table's version-checked snapshot: a
+    * re-bucket through any TableStore is pruned against the new modulus
+    * on the very next read. Session conf is the fallback for marker-less
+    * tables.
     */
-  @volatile private var cachedBuckets: Option[(Int, Long)] = None
-  private def chunkBuckets: Int = {
-    val nowMs = System.currentTimeMillis()
-    val ttlMs = spark.conf.get("spark.graft.bucketMarkerTtlMs", "30000").toLong
-    cachedBuckets match {
-      case Some((b, at)) if nowMs - at < ttlMs => b
-      case _ =>
-        val marker = tables.getTableProp("document_chunks", "buckets").map(_.toInt)
-        cachedBuckets = marker.map(b => (b, nowMs))
-        marker.getOrElse(spark.conf.get("spark.graft.chunkBuckets", "16").toInt)
-    }
-  }
+  private def chunkBuckets: Int =
+    tables.snapshot("document_chunks").flatMap(_.props.get("buckets")).map(_.toInt)
+      .getOrElse(spark.conf.get("spark.graft.chunkBuckets", "16").toInt)
 
   private val DocDdl =
     "id BIGINT, filename STRING, total_chunks INT, metainfo STRING, " +

@@ -3,6 +3,7 @@ package graft.store
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** What one [[TableStore.compactIncremental]] pass touched: `packedFiles`/
   * `packedBytes` are the small files that were rewritten; `keptFiles` were
@@ -411,6 +412,159 @@ object TableStore {
       }
     }
   }
+
+  /** True when a table-relative path is not data: any component starting
+    * with `_` or `.` (crashed-write `_temporary` debris, `.old-*`/`.tmp-*`
+    * swap siblings, `_graft_*` props, the version token, `_SUCCESS`) —
+    * the rule Spark's own parquet listing applies.
+    */
+  private[store] def isHiddenRel(rel: String): Boolean =
+    rel.split("/").exists(s => s.startsWith("_") || s.startsWith("."))
+
+  /** One walk of a table directory: every VISIBLE file as (path relative
+    * to the table root, length, modification time) — non-`.parquet` ones
+    * included, so callers can decide whether a foreign file invalidates a
+    * metadata-only shortcut — and the names of the hidden files at the top
+    * level (props, manifest, token). Hidden directories are never entered,
+    * so a concurrent writer's `_temporary` churn cannot fail the walk.
+    * Throws FileNotFoundException for a missing directory.
+    */
+  private[store] def walk(fs: FileSystem, dir: Path)
+      : (Seq[(String, Long, Long)], Seq[String]) = {
+    val files = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
+    val hidden = scala.collection.mutable.ArrayBuffer.empty[String]
+    def visit(d: Path, prefix: String): Unit =
+      for (st <- fs.listStatus(d)) {
+        val name = st.getPath.getName
+        if (name.startsWith("_") || name.startsWith(".")) {
+          if (prefix.isEmpty && st.isFile) hidden += name
+        } else if (st.isDirectory) visit(st.getPath, s"$prefix$name/")
+        else files += ((prefix + name, st.getLen, st.getModificationTime))
+      }
+    visit(dir, "")
+    (files.toSeq, hidden.toSeq)
+  }
+
+  private[store] val SchemaProp = "schema_ddl"
+  private[store] val StatsManifest = "_stats_manifest"
+
+  /** Parsed stats manifest: (column, unit tag) → file identity (rel, len,
+    * mtime) → canonical verdict. Empty on a missing, unreadable or
+    * unparseable sidecar — the pruned reads then open footers live.
+    */
+  private[store] type Manifest =
+    Map[(String, String), Map[(String, Long, Long), (Int, String, String)]]
+
+  private[store] def parseManifest(text: => Option[String]): Manifest = try {
+    val lines = text.fold(Seq.empty[String])(_.linesIterator.toSeq)
+    if (!lines.headOption.contains("v1")) Map.empty
+    else lines.drop(1).flatMap { l =>
+      l.split("\t", -1) match {
+        case Array(rel, len, mtime, cn, t, code, mn, mx) =>
+          Some((cn, t) -> ((rel, len.toLong, mtime.toLong) -> ((code.toInt, mn, mx))))
+        case _ => None
+      }
+    }.groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).toMap }
+  } catch { case scala.util.control.NonFatal(_) => Map.empty }
+
+  /** The version token: one small hidden file that every TableStore
+    * mutation rewrites in place after its data is in place. It reads
+    * `<schema epoch> <version>`, both random: the epoch carries over
+    * across mutations that cannot change the inferred schema (appends
+    * validated against a known schema, props, the stats manifest) and is
+    * drawn afresh by every other, so a snapshot can inherit its
+    * predecessor's inference. Not a `_graft_` prop: props are copied
+    * byte-for-byte into a swap's staged directory, which receives a fresh
+    * token instead, so data and token commit in one rename.
+    */
+  private[store] val VersionToken = "_table_version"
+
+  /** The table's token; None when it has none (written before tokens
+    * existed, or by something other than TableStore) or when the read
+    * raced an in-place rewrite — an untracked read, never reused.
+    */
+  private[store] def readToken(dir: Path,
+                               conf: org.apache.hadoop.conf.Configuration): Option[String] =
+    try Sidecar.read(new Path(dir, VersionToken), conf).filter(_.nonEmpty)
+    catch { case scala.util.control.NonFatal(_) => None }
+
+  private[store] def epochOf(token: String): String = token.takeWhile(_ != ' ')
+
+  /** Every table's current [[TableSnapshot]], keyed by the qualified
+    * table path: shared by every TableStore instance and by
+    * [[graft.plans.ChunkBucketPruning]] in the JVM.
+    */
+  private val snapshots = new java.util.concurrent.ConcurrentHashMap[String, TableSnapshot]()
+
+  /** The snapshot of the table at qualified path `dir` for `token`, read
+    * BEFORE `walked` is taken so the walk reflects at least that version:
+    * the cached one while the token is unchanged, else one built from
+    * `walked` — inheriting the inference of the cached snapshot of the
+    * same schema epoch — and published if the token still holds. The
+    * first snapshot published for a token wins, so every reader of one
+    * version plans from one file list. A table without a token is built
+    * afresh on every call.
+    */
+  private[store] def snapshotOf(dir: Path, conf: org.apache.hadoop.conf.Configuration,
+      token: Option[String],
+      walked: => (Seq[(String, Long, Long)], Seq[String])): TableSnapshot = {
+    val key = dir.toString
+    val prev = snapshots.get(key)
+    if (token.isDefined && prev != null && prev.token == token) return prev
+    val (files, hidden) = walked
+    val props = hidden.filter(_.startsWith("_graft_")).flatMap { n =>
+      Sidecar.read(new Path(dir, n), conf).map(n.stripPrefix("_graft_") -> _)
+    }.toMap
+    val manifest = parseManifest(
+      if (hidden.contains(StatsManifest)) Sidecar.read(new Path(dir, StatsManifest), conf)
+      else None)
+    val inherited = Option(prev)
+      .filter(p => token.isDefined && p.token.map(epochOf) == token.map(epochOf))
+      .flatMap(_.inferredSchema)
+    val snap = new TableSnapshot(token, files, props, manifest, inherited)
+    if (token.isEmpty || readToken(dir, conf) != token) snap
+    else snapshots.compute(key, (_, cur) => if (cur != null && cur.token == token) cur else snap)
+  }
+
+  /** The current snapshot of the table at qualified path `dir`, walking it
+    * (after `onWalk`) only when its version token changed. None for a
+    * missing directory.
+    */
+  private[graft] def snapshotAt(spark: SparkSession, dir: Path,
+                                onWalk: () => Unit = () => ()): Option[TableSnapshot] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    try Some(snapshotOf(dir, conf, readToken(dir, conf),
+      { onWalk(); walk(dir.getFileSystem(conf), dir) }))
+    catch { case _: java.io.FileNotFoundException => None }
+  }
+
+  /** One monitor per lease lock file, shared by every TableStore instance
+    * in the JVM (see `withLeaseMutex`).
+    */
+  private val leaseMonitors = new java.util.concurrent.ConcurrentHashMap[String, Object]()
+
+  private[store] def leaseMonitor(key: String): Object =
+    leaseMonitors.computeIfAbsent(key, _ => new Object)
+}
+
+/** One immutable view of a table at one version token: its visible files
+  * as (rel, len, mtime), its `_graft_*` props, its parsed stats manifest
+  * and its effective schema — the evolved declaration when the props
+  * carry one, else the files' inference, run at most once per schema
+  * epoch and never memoized when it finds nothing to infer from.
+  */
+private[graft] final class TableSnapshot(
+    val token: Option[String],
+    val files: Seq[(String, Long, Long)],
+    val props: Map[String, String],
+    private[store] val manifest: TableStore.Manifest,
+    @volatile private[store] var inferredSchema: Option[StructType]) {
+
+  def schema(infer: => Option[StructType]): Option[StructType] =
+    props.get(TableStore.SchemaProp).map(StructType.fromDDL).orElse {
+      if (inferredSchema.isEmpty) inferredSchema = infer
+      inferredSchema
+    }
 }
 
 /** Parquet-backed relational table store with CRUD semantics over immutable
@@ -429,6 +583,16 @@ object TableStore {
   * only the affected partition DIRECTORIES. With [[compactIncremental]]
   * keeping files near 128 MB, a single-row mutation costs one file's
   * rewrite regardless of table size.
+  *
+  * Reads plan from one [[TableSnapshot]] per table — file list, props,
+  * stats manifest, schema — reused while the table's version token is
+  * unchanged, so a point read on an unchanged table lists nothing. Every
+  * mutation here rewrites the token once its data is in place, so a
+  * write through any TableStore instance, in this JVM or another, is
+  * visible to the next read. A file dropped into a table directory by
+  * something other than TableStore is not: the pruned reads, schema and
+  * props see it at that table's next TableStore mutation, while
+  * [[maxId]] and the mutations themselves list the directory fresh.
   */
 final class TableStore(spark: SparkSession, root: String) {
 
@@ -465,71 +629,69 @@ final class TableStore(spark: SparkSession, root: String) {
     case None => spark.read.parquet(tablePath(table))
   }
 
-  private val SchemaProp = "schema_ddl"
+  private def tableDir(table: String): Path = fs.makeQualified(new Path(tablePath(table)))
 
-  private def evolvedDdl(table: String): Option[String] =
-    getTableProp(table, SchemaProp)
+  /** Test-visible count of directory walks this instance performed. */
+  private[graft] val listingsPerformed = new java.util.concurrent.atomic.AtomicLong
 
-  /** Inferred-schema cache behind [[tableSchema]]: inference is a Spark
-    * job that lists the whole directory, and every read and every append
-    * fence consults the schema. Each entry is stamped with the table
-    * directory's modification time at inference ([[dirStamp]]): a swap
-    * (this instance's or a foreign writer's) replaces the directory, so a
-    * changed stamp means the entry may be stale and is re-inferred. Own
-    * writes that cannot change a schema (fenced appends, sidecar and
-    * lease files) also move the stamp; [[keepingSchema]] carries the entry
-    * across them. This instance's own swaps still drop their entry
-    * explicitly: on a filesystem with coarse modification times the
-    * replacement directory can carry the old stamp.
+  /** The table's current [[TableSnapshot]]; None for a missing table. */
+  private[graft] def snapshot(table: String): Option[TableSnapshot] =
+    TableStore.snapshotAt(spark, tableDir(table), () => { listingsPerformed.incrementAndGet(); () })
+
+  /** A fresh walk of the table's visible files — what [[maxId]] and the
+    * stats manifest decide from, so no file can escape them — with the
+    * snapshot of the token read before the walk, for its manifest.
     */
-  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Long, org.apache.spark.sql.types.StructType)]()
-
-  private def invalidateSchema(table: String): Unit = {
-    schemaCache.remove(table); ()
+  private def freshView(table: String): (Seq[(String, Long, Long)], TableSnapshot) = {
+    val dir = tableDir(table)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val token = TableStore.readToken(dir, conf)
+    val walked = { listingsPerformed.incrementAndGet(); TableStore.walk(fs, dir) }
+    (walked._1, TableStore.snapshotOf(dir, conf, token, walked))
   }
 
-  /** The table directory's modification time, None for a missing table:
-    * one `stat`, no listing.
-    */
-  private def dirStamp(table: String): Option[Long] =
-    try Some(fs.getFileStatus(new Path(tablePath(table))).getModificationTime)
-    catch { case _: java.io.FileNotFoundException => None }
+  /** A fresh walk of the table's visible files, for the mutations. */
+  private def listFresh(table: String): Seq[(String, Long, Long)] = {
+    listingsPerformed.incrementAndGet()
+    TableStore.walk(fs, tableDir(table))._1
+  }
 
-  /** Run an own write that cannot change the table's schema, carrying a
-    * cached inference that was valid just before it over to the
-    * directory's new stamp — without this every streamed batch would
-    * re-infer in its append fence. A foreign swap racing the write is a
-    * concurrent second writer, outside the lease contract.
+  /** Run an own mutation of `table`, then rewrite its version token. With
+    * `keepsSchema` (the write cannot change the inferred schema) the
+    * token's schema epoch carries over, so the successor snapshot
+    * inherits the inference instead of running it again.
     */
-  private def keepingSchema[T](table: String)(write: => T): T = {
-    val before = dirStamp(table)
+  private def mutating[T](table: String, keepsSchema: Boolean)(write: => T): T = {
+    val dir = tableDir(table)
+    val epoch =
+      if (keepsSchema)
+        TableStore.readToken(dir, spark.sparkContext.hadoopConfiguration).map(TableStore.epochOf)
+      else None
     val out = write
-    val hit = schemaCache.get(table)
-    if (hit != null && before.contains(hit._1))
-      dirStamp(table).foreach(now => schemaCache.replace(table, hit, (now, hit._2)))
+    stampVersion(dir, epoch)
     out
   }
 
+  private def stampVersion(dir: Path, epoch: Option[String]): Unit = {
+    def draw() = java.util.UUID.randomUUID().toString
+    writePropFile(new Path(dir, TableStore.VersionToken),
+      s"${epoch.getOrElse(draw())} ${draw()}")
+  }
+
+  private def evolvedDdl(table: String): Option[String] =
+    snapshot(table).flatMap(_.props.get(TableStore.SchemaProp))
+
   /** The table's EFFECTIVE schema — the evolved declaration when one
-    * exists, else the files' own (cached per directory stamp). None for
-    * a missing table, and None when nothing readable exists to infer
-    * from (a dir with no data files, or one wedged by a crashed write's
-    * `_temporary` debris — effectively schema-less, so there is nothing
-    * for an append to fork); None is never cached.
+    * exists, else the files' own, inferred once per schema epoch by the
+    * snapshot. None for a missing table, and None when nothing readable
+    * exists to infer from (a dir with no data files, or one wedged by a
+    * crashed write's `_temporary` debris — effectively schema-less, so
+    * there is nothing for an append to fork).
     */
   def tableSchema(table: String): Option[org.apache.spark.sql.types.StructType] =
-    dirStamp(table).flatMap { stamp =>
-      evolvedDdl(table).map(org.apache.spark.sql.types.StructType.fromDDL).orElse {
-        val hit = schemaCache.get(table)
-        if (hit != null && hit._1 == stamp) Some(hit._2)
-        else try {
-          val s = spark.read.parquet(tablePath(table)).schema
-          schemaCache.put(table, (stamp, s))
-          Some(s)
-        } catch { case _: org.apache.spark.sql.AnalysisException => None }
-      }
-    }
+    snapshot(table).flatMap(_.schema(
+      try Some(spark.read.parquet(tablePath(table)).schema)
+      catch { case _: org.apache.spark.sql.AnalysisException => None }))
 
   /** Zero-rewrite ADDITIVE schema evolution: declare new (nullable)
     * columns in the table's sidecar schema. Existing files are never
@@ -550,7 +712,7 @@ final class TableStore(spark: SparkSession, root: String) {
     if (clash.nonEmpty) throw new IllegalArgumentException(
       s"evolveSchema on '$table': column(s) ${clash.mkString(", ")} already " +
         "exist — additive evolution cannot redefine a column")
-    setTableProp(table, SchemaProp, StructType(cur.fields ++ add.fields).toDDL)
+    setTableProp(table, TableStore.SchemaProp, StructType(cur.fields ++ add.fields).toDDL)
     // record WHICH columns evolution added (accumulating across calls):
     // merge/CDC sources may omit exactly these — they null-fill, the same
     // semantics reads already give old files — while omitting an
@@ -560,7 +722,6 @@ final class TableStore(spark: SparkSession, root: String) {
       .flatMap(_.split(",")).filter(_.nonEmpty)
     setTableProp(table, EvolvedColsProp,
       (prev ++ add.fieldNames).mkString(","))
-    invalidateSchema(table)
   }
 
   private val EvolvedColsProp = "evolved_cols"
@@ -595,12 +756,14 @@ final class TableStore(spark: SparkSession, root: String) {
     * name with a different type refuses; ABSENT columns are allowed only
     * on an evolved table (whose reads supply the declared schema and
     * null-fill) — on an undeclared table they would fork the footer
-    * schemas, so they refuse too.
+    * schemas, so they refuse too. True when the table had a schema to
+    * check against: the append then cannot change it.
     */
   private def validateAppendSchema(table: String, df: DataFrame,
-                                   partitionCols: Seq[String] = Nil): Unit = {
+                                   partitionCols: Seq[String] = Nil): Boolean = {
     val declared = evolvedDdl(table).isDefined
-    tableSchema(table).foreach { ts =>
+    val schema = tableSchema(table)
+    schema.foreach { ts =>
       val eff = ts.fields.map(f => f.name.toLowerCase -> f.dataType).toMap
       val extra = df.schema.fields.filterNot(f => eff.contains(f.name.toLowerCase))
       if (extra.nonEmpty) throw new IllegalArgumentException(
@@ -630,13 +793,13 @@ final class TableStore(spark: SparkSession, root: String) {
             "include the columns or declare the schema via evolveSchema")
       }
     }
+    schema.isDefined
   }
 
   /** S9 — append-only insert (base.py:13-22). */
   def append(table: String, df: DataFrame): Unit = {
-    validateAppendSchema(table, df)
-    keepingSchema(table)(df.write.mode("append").parquet(tablePath(table)))
-    invalidateListing(table)
+    val known = validateAppendSchema(table, df)
+    mutating(table, keepsSchema = known)(df.write.mode("append").parquet(tablePath(table)))
   }
 
   /** Append with hive-style partitioning. At 100 TB, child tables are
@@ -649,7 +812,7 @@ final class TableStore(spark: SparkSession, root: String) {
     // appending nothing is a no-op — and an empty partitioned write would
     // create a file-less directory that poisons schema inference
     if (df.isEmpty) return
-    validateAppendSchema(table, df, partitionCols)
+    val known = validateAppendSchema(table, df, partitionCols)
     // clear an empty-table schema marker (see overwriteAtomic) so the
     // layout stays uniformly partitioned; an unreadable (file-less) dir
     // counts as empty
@@ -665,39 +828,28 @@ final class TableStore(spark: SparkSession, root: String) {
       // root is hidden — a crashed write's `_temporary/.../part-*.parquet`
       // must read as "no data" (the leaf name alone looks like data), or
       // the table wedges permanently: read() throws on a dir whose only
-      // files are under _temporary, and nothing would ever clean it
-      // early-exit walk (NOT listVisibleFiles: this runs once per
-      // streaming trigger, and a boolean must not enumerate a compacted
-      // corpus's whole file list)
-      def hasDataFiles: Boolean = {
-        val rootPath = f.makeQualified(dir).toUri.getPath
-        val it = f.listFiles(dir, true)
-        var found = false
-        while (!found && it.hasNext) {
-          val rel = it.next().getPath.toUri.getPath
-            .stripPrefix(rootPath).stripPrefix("/")
-          if (!isHiddenRel(rel)) found = true
-        }
-        found
-      }
+      // files are under _temporary, and nothing would ever clean it. The
+      // snapshot answers without a walk; only a table it shows file-less
+      // is walked fresh, so a file written around TableStore still counts
+      def hasDataFiles: Boolean =
+        snapshot(table).exists(_.files.nonEmpty) || listFresh(table).nonEmpty
       // sidecar props must survive the empty-marker clearing — wiping
       // them with the marker would strip layout metadata (the exact
       // mismatch the props exist to prevent); captured before the delete,
       // re-written after the append recreates the directory
       val props = allTableProps(table)
       if (!hasDataFiles || read(table).isEmpty) {
-        f.delete(dir, true)
-        df.write.mode("append").partitionBy(partitionCols: _*)
-          .parquet(tablePath(table))
-        props.foreach { case (k, v) => setTableProp(table, k, v) }
-        invalidateListing(table)
-        invalidateSchema(table)
+        mutating(table, keepsSchema = false) {
+          f.delete(dir, true)
+          df.write.mode("append").partitionBy(partitionCols: _*)
+            .parquet(tablePath(table))
+          props.foreach { case (k, v) => writePropFile(propPath(table, k), v) }
+        }
         return
       }
     }
-    keepingSchema(table)(df.write.mode("append").partitionBy(partitionCols: _*)
-      .parquet(tablePath(table)))
-    invalidateListing(table)
+    mutating(table, keepsSchema = known)(df.write.mode("append")
+      .partitionBy(partitionCols: _*).parquet(tablePath(table)))
   }
 
   /** Replace a table's contents atomically: materialize to a temp dir
@@ -1020,7 +1172,7 @@ final class TableStore(spark: SparkSession, root: String) {
                            onNoMatch: => Unit = ())
                           (transform: DataFrame => DataFrame): Unit = {
     def full(): Unit = overwriteAtomic(table, transform(read(table)), partitionCols)
-    val visible = listVisibleFiles(table).map(_._1)
+    val visible = listFresh(table).map(_._1)
     val (nested, rootLevel) = visible.partition(_.contains('/'))
     val flat = partitionCols.isEmpty
     val misaddressed =
@@ -1110,100 +1262,6 @@ final class TableStore(spark: SparkSession, root: String) {
     }
   }
 
-  /** Every VISIBLE file under the table directory as (path relative to the
-    * table root, length): the same hidden-path rule reads use — any path
-    * component starting with `_` or `.` (crashed-write `_temporary` debris,
-    * `.old-*`/`.tmp-*` swap siblings, `_graft_*` sidecars, `_SUCCESS`) is
-    * not data. Includes non-`.parquet` visible files (a foreign writer's
-    * doing) so callers can decide whether such a file invalidates a
-    * metadata-only shortcut.
-    */
-  private def isHiddenRel(rel: String): Boolean =
-    rel.split("/").exists(s => s.startsWith("_") || s.startsWith("."))
-
-  private def listVisibleFiles(table: String): Seq[(String, Long)] =
-    listVisibleFilesMeta(table).map(v => (v._1, v._2))
-
-  /** As [[listVisibleFiles]] but carrying the modification time — the
-    * identity the stats manifest validates entries against (files in
-    * this store are immutable once written: appends create new names,
-    * rewrites swap whole directories — so (rel, len, mtime) matching
-    * means the footer bytes are the ones the manifest summarized).
-    */
-  /** Opt-in TTL cache for [[listVisibleFilesMeta]]
-    * (`spark.graft.listingCacheTtlMs`, default 0 = off). The pruned
-    * reads made point lookups plan O(matched files), but every lookup
-    * still paid an O(#files) recursive directory listing on the driver
-    * — at ~800k files that listing IS the serving latency. With a TTL,
-    * repeated lookups amortize one listing per window. Consistency
-    * contract: every MUTATION through THIS instance invalidates its
-    * entry (appends, swaps, recovery), so the owning writer-and-server
-    * process — the demo wiring — always reads its own writes exactly;
-    * only a FOREIGN writer's files can be invisible, for at most the
-    * TTL (the same bounded staleness any cross-process cache has). A
-    * stale entry can also name files a foreign swap just removed — the
-    * scan then fails loudly (retryable), never returns wrong rows
-    * silently. Single-writer deployments (the lease's contract) are
-    * exact; leave the TTL at 0 when foreign writers must be visible
-    * instantly. The SERIAL id allocator ([[maxId]]) BYPASSES this cache
-    * unconditionally — appends are not lease-gated, and an allocator
-    * answered from a stale listing would mint colliding ids (see
-    * [[listVisibleFilesMetaFresh]]).
-    */
-  private val listingCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Seq[(String, Long, Long)])]()
-
-  private def listingTtlMs: Long =
-    spark.conf.get("spark.graft.listingCacheTtlMs", "0").toLong
-
-  /** Test-visible count of REAL (uncached) listings. */
-  private[graft] val listingsPerformed = new java.util.concurrent.atomic.AtomicLong
-
-  private[store] def invalidateListing(table: String): Unit = {
-    listingCache.remove(table); ()
-  }
-
-  private def listVisibleFilesMeta(table: String): Seq[(String, Long, Long)] = {
-    val ttl = listingTtlMs
-    if (ttl <= 0) return listVisibleFilesMetaFresh(table)
-    val now = System.nanoTime()
-    val hit = listingCache.get(table)
-    if (hit != null && now - hit._1 < ttl * 1000000L) return hit._2
-    val fresh = listVisibleFilesMetaFresh(table)
-    listingCache.put(table, (now, fresh))
-    fresh
-  }
-
-  /** Always-live listing, refreshing the cache entry as a side effect.
-    * The SERIAL id allocator ([[maxId]] → [[footerMaxId]]) must use this
-    * tier: appends are deliberately NOT lease-gated (they cannot corrupt
-    * the swap protocol), so a foreign writer's fresh append is a
-    * legitimate concurrent event even in a leased deployment — an
-    * id-allocation answered from a TTL-stale listing could under-report
-    * the max and silently mint COLLIDING ids. Bounded staleness is fine
-    * for reads (a query sees the table as of ≤TTL ago — ordinary
-    * snapshot semantics); it is never fine for an allocator.
-    */
-  private def listVisibleFilesMetaFresh(table: String): Seq[(String, Long, Long)] = {
-    listingsPerformed.incrementAndGet()
-    val fresh = listVisibleFilesAt(new Path(tablePath(table)))
-    if (listingTtlMs > 0) listingCache.put(table, (System.nanoTime(), fresh))
-    fresh
-  }
-
-  private def listVisibleFilesAt(dir: Path): Seq[(String, Long, Long)] = {
-    val f = fs
-    val rootPath = f.makeQualified(dir).toUri.getPath
-    val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
-    val it = f.listFiles(dir, true)
-    while (it.hasNext) {
-      val st = it.next()
-      val rel = st.getPath.toUri.getPath.stripPrefix(rootPath).stripPrefix("/")
-      if (!isHiddenRel(rel)) out += ((rel, st.getLen, st.getModificationTime))
-    }
-    out.toSeq
-  }
-
   /** Max value of an id column, or 0 on empty/missing table (the SERIAL
     * replacement — SURVEY §7.4.2).
     *
@@ -1251,8 +1309,10 @@ final class TableStore(spark: SparkSession, root: String) {
     * ([[compactIncremental]] holds it at O(table bytes / threshold)).
     */
   private[store] def footerMaxId(table: String, idCol: String): Option[Long] = try {
-    // FRESH listing, never the TTL cache: see [[listVisibleFilesMetaFresh]]
-    val meta = listVisibleFilesMetaFresh(table)
+    // a FRESH walk, never the snapshot's file list: appends are not
+    // lease-gated and files written by something other than TableStore
+    // must count too — an allocator that under-reports mints colliding ids
+    val (meta, snap) = freshView(table)
     if (meta.exists(v => !v._1.endsWith(".parquet"))) return None
     val files = meta.filter(_._2 > 0)
     if (files.isEmpty) return Some(0L)
@@ -1262,7 +1322,8 @@ final class TableStore(spark: SparkSession, root: String) {
     // O(appends since the last compaction refresh). Identical rules:
     // the canonical verdict encodes exactly the never-guess semantics
     // (0 = unusable anywhere → scan; 1 = provably value-less; 2 = max)
-    val cached = manifestVerdicts(table, idCol, TableStore.IntegralUnit)
+    val cached = snap.manifest.getOrElse(
+      (idCol, TableStore.unitTag(TableStore.IntegralUnit)), Map.empty)
     val (hit, miss) = files.partition(v => cached.contains((v._1, v._2, v._3)))
     val missVerdicts: Seq[(Int, String, String)] =
       if (miss.isEmpty) Nil
@@ -1294,10 +1355,9 @@ final class TableStore(spark: SparkSession, root: String) {
     * missing table. Callers size compaction targets from this.
     */
   def sizeInBytes(table: String): Long =
-    if (!exists(table)) 0L
-    else listVisibleFiles(table).collect {
-      case (rel, len) if rel.endsWith(".parquet") => len
-    }.sum
+    snapshot(table).fold(0L)(_.files.collect {
+      case (rel, len, _) if rel.endsWith(".parquet") => len
+    }.sum)
 
   /** Stats-pruned range read: the table filtered to `lo <= column <= hi`
     * (inclusive, integral column), with the FILE LIST pruned by parquet
@@ -1500,7 +1560,8 @@ final class TableStore(spark: SparkSession, root: String) {
     * proved disjoint from ANY conjunct can hold no matching row, because
     * the row filter is the conjunction of the specs' predicates. Every
     * miss file pays ONE footer open for ALL specs (the k-conjunct read
-    * must not cost k footer passes) and ONE manifest parse total.
+    * must not cost k footer passes). Files and manifest come from the
+    * table's snapshot, so an unchanged table pays no listing.
     *
     * Scale note: without the manifest every pruned read pays an
     * O(#files) footer-metadata pass (bounded, two-tier, but PER QUERY).
@@ -1513,13 +1574,16 @@ final class TableStore(spark: SparkSession, root: String) {
       specs: Seq[(String, TableStore.StatsUnit,
         ((Int, String, String)) => Boolean)]): DataFrame = {
     def fallback = read(table).filter(rowFilter)
-    val meta = listVisibleFilesMeta(table)
+    val snap = snapshot(table).getOrElse(return fallback)
+    val meta = snap.files
     if (meta.isEmpty || meta.exists(v => !v._1.endsWith(".parquet")))
       return fallback
     val files = meta.filter(_._2 > 0)
     if (files.isEmpty) return fallback
-    val cachedBySpec = manifestVerdictsAll(table,
-      specs.map { case (cn, u, _) => (cn, u) })
+    val cachedBySpec = specs.map { case (cn, u, _) =>
+      val tag = TableStore.unitTag(u)
+      (cn, tag) -> snap.manifest.getOrElse((cn, tag), Map.empty)
+    }.toMap
     // the partition tier runs FIRST: a spec whose column is a hive
     // PARTITION column of a file resolves from the directory name alone —
     // partition columns carry no footer statistics, so without this tier
@@ -1596,7 +1660,6 @@ final class TableStore(spark: SparkSession, root: String) {
   // compaction cadence) is the correct lifecycle.
   // -------------------------------------------------------------------
 
-  private val StatsManifest = "_stats_manifest"
   private val StatsColsProp = "stats_cols"
 
   /** Declare the columns whose footer statistics the manifest maintains
@@ -1664,10 +1727,10 @@ final class TableStore(spark: SparkSession, root: String) {
   private def refreshStatsManifestUnsafe(table: String): Unit = {
     val specs = declaredStatsSpecs(table)
     if (specs.isEmpty || !exists(table)) return
-    val files = listVisibleFilesMeta(table)
-      .filter(v => v._1.endsWith(".parquet") && v._2 > 0)
+    val (listed, snap) = freshView(table)
+    val files = listed.filter(v => v._1.endsWith(".parquet") && v._2 > 0)
     val cachedBySpec = specs.map { case (cn, u) =>
-      (cn, u) -> manifestVerdicts(table, cn, u)
+      (cn, u) -> snap.manifest.getOrElse((cn, TableStore.unitTag(u)), Map.empty)
     }.toMap
     // a file missing ANY spec's entry is recomputed for ALL specs from
     // one footer open; fully-covered files carry over untouched
@@ -1697,8 +1760,8 @@ final class TableStore(spark: SparkSession, root: String) {
     }
     val f = fs
     val tmp = new Path(tablePath(table), s".manifest-tmp-${System.nanoTime()}")
-    val dest = new Path(tablePath(table), StatsManifest)
-    try {
+    val dest = new Path(tablePath(table), TableStore.StatsManifest)
+    try mutating(table, keepsSchema = true) {
       val out = f.create(tmp, true)
       try out.write(sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       finally out.close()
@@ -1710,42 +1773,6 @@ final class TableStore(spark: SparkSession, root: String) {
       catch { case scala.util.control.NonFatal(_) => () }
       throw e
     }
-  }
-
-  /** Validated manifest entries for (column, unit): key (rel, len, mtime)
-    * → canonical verdict. Empty on any read/parse trouble — the caller
-    * falls back to live footers file-by-file.
-    */
-  private def manifestVerdicts(table: String, column: String,
-      unit: TableStore.StatsUnit): Map[(String, Long, Long), (Int, String, String)] =
-    manifestVerdictsAll(table, Seq(column -> unit))((column, TableStore.unitTag(unit)))
-
-  /** As [[manifestVerdicts]] for several specs from ONE sidecar read and
-    * parse: (column, tag) → entry map (every requested spec present,
-    * possibly empty). A k-conjunct read must not re-read the sidecar k
-    * times.
-    */
-  private def manifestVerdictsAll(table: String,
-      specs: Seq[(String, TableStore.StatsUnit)])
-      : Map[(String, String), Map[(String, Long, Long), (Int, String, String)]] = {
-    val wanted = specs.map { case (cn, u) => (cn, TableStore.unitTag(u)) }
-    val empty = wanted.map(_ -> Map.empty[(String, Long, Long), (Int, String, String)]).toMap
-    try {
-      val text = Sidecar.read(new Path(tablePath(table), StatsManifest),
-        spark.sparkContext.hadoopConfiguration).getOrElse(return empty)
-      val lines = text.linesIterator.toSeq
-      if (!lines.headOption.contains("v1")) return empty
-      val wantedSet = wanted.toSet
-      val parsed = lines.drop(1).flatMap { l =>
-        l.split("\t", -1) match {
-          case Array(rel, len, mtime, cn, t, code, mn, mx)
-            if wantedSet.contains((cn, t)) =>
-            Some((cn, t) -> ((rel, len.toLong, mtime.toLong) -> ((code.toInt, mn, mx))))
-          case _ => None
-        }
-      }.groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).toMap }
-      empty ++ parsed
-    } catch { case scala.util.control.NonFatal(_) => empty }
   }
 
   /** Shared two-tier footer fan-out for the stats-pruned reads: driver
@@ -1850,7 +1877,7 @@ final class TableStore(spark: SparkSession, root: String) {
                          partitionCols: Seq[String] = Nil,
                          sortCols: Seq[String] = Nil): CompactStats = {
     if (!exists(table)) return CompactStats(0, 0L, 0)
-    val visible = listVisibleFiles(table)
+    val visible = listFresh(table).map(v => (v._1, v._2))
     val (small, kept) = visible.partition { case (rel, len) =>
       rel.endsWith(".parquet") && len < smallThreshold
     }
@@ -1927,6 +1954,7 @@ final class TableStore(spark: SparkSession, root: String) {
     df.write.mode("overwrite").partitionBy(effectiveParts: _*)
       .parquet(tmp.toString) // forces execution while dest is still live
     props.foreach { case (k, v) => writePropFile(new Path(tmp, s"_graft_$k"), v) }
+    stampVersion(tmp, None) // commits with the data in the one rename below
     // carry the swap-runner's OWN lease into the staged dir (a foreign
     // one was refused above) so writer protection is continuous across
     // the swap instead of lapsing until the holder's next renewal —
@@ -1941,7 +1969,7 @@ final class TableStore(spark: SparkSession, root: String) {
     // and the statement re-runnable. One listing of tmp (staged output
     // only), not one exists() per kept file.
     if (keptRels.nonEmpty) {
-      val stagedRels = listVisibleFilesAt(tmp).map(_._1)
+      val stagedRels = TableStore.walk(f, tmp)._1.map(_._1)
       val collide = keptRels.find(k =>
         stagedRels.exists(r => r == k || r.startsWith(k + "/")))
       collide.foreach { k =>
@@ -1993,8 +2021,6 @@ final class TableStore(spark: SparkSession, root: String) {
     failpoint("swapped")
     f.delete(old, true)
     deleteSwapMarkers(dest)
-    invalidateListing(table)
-    invalidateSchema(table)
   }
 
   // -------------------------------------------------------------------
@@ -2084,8 +2110,14 @@ final class TableStore(spark: SparkSession, root: String) {
     // an expired lease (crashed owner) recovers normally. The lookup
     // covers the swap siblings: mid-window the lease rides inside them.
     checkNoForeignLease(table, "swap recovery")
-    invalidateListing(table) // any outcome below may reshape the file set
-    invalidateSchema(table)
+    val outcome = recover(table)
+    // every outcome but NoDebris may have reshaped the table
+    if (outcome != SwapRecovery.NoDebris && exists(table))
+      stampVersion(tableDir(table), None)
+    outcome
+  }
+
+  private def recover(table: String): SwapRecovery = {
     val f = fs
     val parent = new Path(root)
     val dest = new Path(tablePath(table))
@@ -2257,7 +2289,8 @@ final class TableStore(spark: SparkSession, root: String) {
   // acquires + renews per batch (Postgres gave the reference this for
   // free via connection-level locking, db.py:24-33). Acquisition is
   // ATOMIC cross-process on filesystems with an atomic exclusive create
-  // (local O_EXCL, HDFS namenode create): fresh grabs create-exclusive,
+  // (local O_EXCL, HDFS namenode create; on the local filesystem every
+  // acquire and release also holds an OS file lock): fresh grabs create-exclusive,
   // expired takeovers retire-by-rename then create-exclusive, renewals
   // rename-replace, and every winner re-verifies its own record — see
   // acquireWriterLease. On object stores without atomic create the
@@ -2270,13 +2303,34 @@ final class TableStore(spark: SparkSession, root: String) {
 
   private val WriterLease = "_writer_lease"
 
-  /** Serializes THIS instance's lease file operations: a stream's async
-    * termination-listener release (bus thread) must not interleave with
-    * the successor query's acquire (batch thread) mid-create — observed
-    * as a chmod-after-create failure on the local filesystem. Cross-JVM
-    * interleavings remain best-effort as documented above.
+  /** Run `body` holding the table's lease mutex: a JVM-wide monitor and,
+    * on the local filesystem, an OS file lock on a hidden file beside the
+    * pre-table leases, which excludes acquirers in other processes too.
+    * Every acquire and release runs inside it. Without it, an expired-
+    * lease takeover could crown two owners: a racer that read the stale
+    * record before another's takeover renames the winner's fresh record
+    * aside, and a third racer's exclusive create lands in that vacancy
+    * before the record is put back. It also keeps a stream's async
+    * termination-listener release (bus thread) from interleaving with the
+    * successor query's acquire (batch thread) mid-create. On other
+    * filesystems processes still race through the protocol alone.
     */
-  private val leaseLock = new Object
+  private def withLeaseMutex[T](table: String)(body: => T): T = {
+    val lockFile = fs.makeQualified(new Path(new Path(root, PreLeaseDir), s".$table.lock"))
+    TableStore.leaseMonitor(lockFile.toString).synchronized {
+      fs match {
+        case _: org.apache.hadoop.fs.LocalFileSystem |
+             _: org.apache.hadoop.fs.RawLocalFileSystem =>
+          val nio = java.nio.file.Paths.get(lockFile.toUri.getPath)
+          java.nio.file.Files.createDirectories(nio.getParent)
+          val ch = java.nio.channels.FileChannel.open(nio,
+            java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.WRITE)
+          // closing the channel releases the lock
+          try { ch.lock(); body } finally ch.close()
+        case _ => body
+      }
+    }
+  }
 
   /** This store instance's writer identity — the lease owner id. Two
     * components sharing one TableStore instance (the demo wiring: ingest
@@ -2387,12 +2441,18 @@ final class TableStore(spark: SparkSession, root: String) {
     * no lease.
     *
     * Cross-PROCESS atomicity (two driver JVMs racing the same grab):
+    *  - on the local filesystem the whole acquisition runs under an OS
+    *    file lock (`withLeaseMutex`), so racers take turns; the steps
+    *    below are what keeps racers on other filesystems apart;
     *  - a fresh acquisition CREATE-EXCLUSIVEs the lease file — atomic on
     *    the local filesystem (O_EXCL) and on HDFS (namenode create);
     *    exactly one of N racers owns the path;
     *  - an expired-lease takeover first RETIRES the stale file with an
     *    atomic rename — exactly one of N renamers succeeds, and only the
-    *    winner proceeds to the exclusive create;
+    *    winner proceeds to the exclusive create. A racer holding an
+    *    older read can still rename the winner's fresh record aside and
+    *    open a window for a third racer's create (two owners), which is
+    *    why the local filesystem adds the file lock;
     *  - after creating, the winner RE-READS the file and returns true
     *    only if the surviving owner field is its own — on stores whose
     *    create is check-then-write rather than atomic (some object
@@ -2411,7 +2471,7 @@ final class TableStore(spark: SparkSession, root: String) {
     * verify), which crowns at most one owner by construction.
     */
   def acquireWriterLease(table: String, ttlMs: Long = leaseTtlMs): Boolean =
-    leaseLock.synchronized {
+    withLeaseMutex(table) {
       val now = System.currentTimeMillis()
       // write-guard tier: the pre-table file is ALWAYS in the set (a
       // recovery-restored dir can carry an expired in-dir record while
@@ -2419,30 +2479,28 @@ final class TableStore(spark: SparkSession, root: String) {
       val cands = leaseCandidates(table, readPreAlways = true)
       if (cands.exists { case (_, o, e) => o != writerId && e > now })
         return false
-      keepingSchema(table) {
-        val active = if (exists(table)) leasePath(table) else preLeasePath(table)
-        val content = s"v1\t$writerId\t${now + ttlMs}"
-        val ownLive = cands.exists { case (_, o, e) => o == writerId && e > now }
-        val ok =
-          if (ownLive) renewLeaseAtomic(active, content)
-          else {
-            // fresh grab or expired takeover: clear the active path with an
-            // atomic rename iff THE STALE RECORD WE VALIDATED still sits
-            // there, then create-exclusive
-            val conf = spark.sparkContext.hadoopConfiguration
-            val staleAtActive = Sidecar.read(active, conf)
-            (staleAtActive.isEmpty || retireLeaseFile(active, staleAtActive.get)) &&
-              createLeaseExclusive(active, content) &&
-              verifyOwnLease(active)
-          }
-        // the pre-table file is superseded the moment the in-dir lease is
-        // ours — retire our own copy so it cannot outlive a later release
-        if (ok && (active != preLeasePath(table)))
-          Sidecar.read(preLeasePath(table), spark.sparkContext.hadoopConfiguration)
-            .flatMap(parseLease).filter(_._1 == writerId)
-            .foreach(_ => fs.delete(preLeasePath(table), false))
-        ok
-      }
+      val active = if (exists(table)) leasePath(table) else preLeasePath(table)
+      val content = s"v1\t$writerId\t${now + ttlMs}"
+      val ownLive = cands.exists { case (_, o, e) => o == writerId && e > now }
+      val ok =
+        if (ownLive) renewLeaseAtomic(active, content)
+        else {
+          // fresh grab or expired takeover: clear the active path with an
+          // atomic rename iff THE STALE RECORD WE VALIDATED still sits
+          // there, then create-exclusive
+          val conf = spark.sparkContext.hadoopConfiguration
+          val staleAtActive = Sidecar.read(active, conf)
+          (staleAtActive.isEmpty || retireLeaseFile(active, staleAtActive.get)) &&
+            createLeaseExclusive(active, content) &&
+            verifyOwnLease(active)
+        }
+      // the pre-table file is superseded the moment the in-dir lease is
+      // ours — retire our own copy so it cannot outlive a later release
+      if (ok && (active != preLeasePath(table)))
+        Sidecar.read(preLeasePath(table), spark.sparkContext.hadoopConfiguration)
+          .flatMap(parseLease).filter(_._1 == writerId)
+          .foreach(_ => fs.delete(preLeasePath(table), false))
+      ok
     }
 
   /** Post-create owner verification, tolerant of TRANSIENT absence: a
@@ -2710,7 +2768,7 @@ final class TableStore(spark: SparkSession, root: String) {
     * any pre-table file this writer left behind.
     */
   def releaseWriterLease(table: String): Unit =
-    leaseLock.synchronized {
+    withLeaseMutex(table) {
       val conf = spark.sparkContext.hadoopConfiguration
       for (p <- Seq(leasePath(table), preLeasePath(table)))
         Sidecar.read(p, conf).flatMap(parseLease).foreach { case (owner, _) =>
@@ -2756,14 +2814,14 @@ final class TableStore(spark: SparkSession, root: String) {
     * rewrite), partition directory count, the declared stats columns
     * and how many files the manifest currently covers (pruned reads pay
     * live footers for the rest), the writer-lease state, and whether
-    * swap debris awaits recovery. One listing + one manifest read; no
-    * data I/O, no Spark job — safe to poll.
+    * swap debris awaits recovery. One fresh listing + one manifest read;
+    * no data I/O, no Spark job — safe to poll.
     */
   def tableReport(table: String,
                   smallThreshold: Long = 32L * 1024 * 1024): TableReport = {
     val present = exists(table)
     val files =
-      if (present) listVisibleFilesMeta(table).filter(_._1.endsWith(".parquet"))
+      if (present) listFresh(table).filter(_._1.endsWith(".parquet"))
       else Nil
     reportFromFiles(table, present, files, hasSwapDebris(table), smallThreshold)
   }
@@ -2794,9 +2852,11 @@ final class TableStore(spark: SparkSession, root: String) {
     val covered =
       if (specs.isEmpty) 0
       else {
-        val cache = manifestVerdictsAll(table, specs)
+        val cache = TableStore.parseManifest(Sidecar.read(
+          new Path(tablePath(table), TableStore.StatsManifest),
+          spark.sparkContext.hadoopConfiguration))
         files.count(v => specs.forall { case (cn, u) =>
-          cache((cn, TableStore.unitTag(u))).contains((v._1, v._2, v._3))
+          cache.get((cn, TableStore.unitTag(u))).exists(_.contains((v._1, v._2, v._3)))
         })
       }
     TableReport(table, files.size, files.map(_._2).sum,
@@ -2817,9 +2877,7 @@ final class TableStore(spark: SparkSession, root: String) {
     * metadata via [[reportFromFiles]]. What remains per table is bounded
     * point READS (lease record, stats specs, manifest) — GETs an ops
     * poll can afford, not listings. Counted as ONE entry in
-    * [[listingsPerformed]]; when the listing cache is on, each table's
-    * bucket refreshes its cache entry, so a following pruned read pays
-    * no relisting either.
+    * [[listingsPerformed]].
     *
     * Ordering and row shape match `listTables().map(tableReport)`
     * exactly, including zero-file rows for mid-swap-absent tables (their
@@ -2852,17 +2910,14 @@ final class TableStore(spark: SparkSession, root: String) {
       if (cut > 0) {
         val top = rel.substring(0, cut)
         val inner = rel.substring(cut + 1)
-        if (live.contains(top) && !isHiddenRel(inner))
+        if (live.contains(top) && !TableStore.isHiddenRel(inner))
           byTable.getOrElseUpdate(top,
             scala.collection.mutable.ArrayBuffer.empty) +=
             ((inner, st.getLen, st.getModificationTime))
       }
     }
-    val now = System.nanoTime()
     (live ++ debrisFor).toSeq.sorted.map { t =>
       val all = byTable.get(t).map(_.toSeq).getOrElse(Nil)
-      if (live.contains(t) && listingTtlMs > 0)
-        listingCache.put(t, (now, all))
       reportFromFiles(t, live.contains(t),
         all.filter(_._1.endsWith(".parquet")),
         debrisFor.contains(t), smallThreshold)
@@ -2881,7 +2936,7 @@ final class TableStore(spark: SparkSession, root: String) {
     new Path(tablePath(table) + s"/_graft_$key")
 
   def setTableProp(table: String, key: String, value: String): Unit =
-    keepingSchema(table)(writePropFile(propPath(table, key), value))
+    mutating(table, keepsSchema = true)(writePropFile(propPath(table, key), value))
 
   private def writePropFile(at: Path, value: String): Unit = {
     val out = fs.create(at, true)

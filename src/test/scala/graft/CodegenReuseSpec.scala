@@ -111,6 +111,32 @@ class CodegenReuseSpec extends AnyFunSuite with SharedSpark {
       }
     }
 
+  test("bounded-frame checks and the published-increment probe compile once") {
+    // a frame of unknown size: the optimizer drops a limit over a local
+    // relation, or over any frame whose row bound it already knows
+    val emb = spark.range(2).select(col("id"), array(col("id").cast("float"), lit(1.0f)).as("v"))
+    val queries = spark.range(1).select(explode(array(lit(7L), lit(8L))).as("qid"))
+      .select(col("qid"), array(lit(1.0f), lit(1.0f)).as("qv"))
+    def bounded(): Unit = {
+      graft.ext.Similarity.bruteForceTopKBatch(emb, "id", "v", queries, "qid", "qv", 1)
+      ()
+    }
+    val root = tmpDir("codegen-delta") + "/delivery"
+    def export(): Unit = {
+      graft.ops.DeltaExport.exportDelta(emb.select(col("id"), col("id").cast("string").as("txt")),
+        col("id"), Seq(col("id")), Seq("txt" -> col("txt")), 10L, root, "delta-000")
+      ()
+    }
+    export()
+    // a published name refuses after the probe that found it published
+    def republish(): Unit = intercept[IllegalStateException](export())
+    bounded()
+    republish()
+    val counts = Seq("bounded" -> compiled(bounded())._2,
+      "published probe" -> compiled(republish())._2)
+    assert(counts.forall(_._2 == 0), s"a second execution compiled classes: $counts")
+  }
+
   /** The plan's result with every parameter turned back into the literal
     * it stands for — what the same plan returned before parameters.
     */

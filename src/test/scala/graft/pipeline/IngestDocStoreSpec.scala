@@ -26,7 +26,8 @@ class IngestDocStoreSpec extends AnyFunSuite with SharedSpark {
   private def writeDoc(dir: String, name: String, body: String): Unit =
     Files.write(Paths.get(dir, name), body.getBytes(StandardCharsets.UTF_8))
 
-  private def fixture(): (DocumentStore, TableStore, ObjectStore, IngestStats) = {
+  private def fixture(root: String = tmpDir("store"))
+      : (DocumentStore, TableStore, ObjectStore, IngestStats) = {
     val inbox = tmpDir("inbox")
     // three sections of ~12 tokens each; minTokens=10 forces a chunk per
     // section -> 3 chunks, mirroring the reference fixture's 3 chunks
@@ -44,7 +45,6 @@ class IngestDocStoreSpec extends AnyFunSuite with SharedSpark {
         |""".stripMargin)
     writeDoc(inbox, "other2.pdf",
       "Notes:\nShort memo text only here.\n")
-    val root = tmpDir("store")
     val tables = new TableStore(spark, s"$root/tables")
     val objects = new ObjectStore(spark, s"$root/bucket")
     val pipe = new IngestPipeline(spark, tables, objects,
@@ -212,14 +212,27 @@ class IngestDocStoreSpec extends AnyFunSuite with SharedSpark {
     tables.overwriteAtomic("document_chunks", rebucketed, Seq("doc_bucket"))
     tables.setTableProp("document_chunks", "buckets", "4")
 
-    // TTL 0 = always revalidate (the test can't wait 30 s); the SAME
-    // live store instance must serve complete results under the new
-    // modulus — a forever-cache would prune bucket-16 and return empty
-    val prevTtl = spark.conf.get("spark.graft.bucketMarkerTtlMs", "30000")
-    spark.conf.set("spark.graft.bucketMarkerTtlMs", "0")
-    try assert(store.getChunks(id1).count() == 3,
+    // the SAME live store instance must serve complete results under the
+    // new modulus — a stale bucket count would prune bucket-16 and
+    // return empty
+    assert(store.getChunks(id1).count() == 3,
       "stale cached bucket count must not empty out a re-bucketed read")
-    finally spark.conf.set("spark.graft.bucketMarkerTtlMs", prevTtl)
+  }
+
+  test("a second instance's re-bucket serves complete reads") {
+    val root = tmpDir("store")
+    val (store, tables, _, _) = fixture(root)
+    val id1 = store.documents.orderBy("id").collect().head.getAs[Long]("id")
+    def bare(): Long = tables.read("document_chunks").filter(col("document_id") === id1).count()
+    assert(store.getChunks(id1).count() == 3 && bare() == 3) // both hold the 16-bucket view
+    val other = new TableStore(spark, s"$root/tables")
+    val rebucketed = other.read("document_chunks").drop("doc_bucket")
+      .withColumn("doc_bucket", IngestPipeline.chunkBucket(col("document_id"), 4))
+    other.overwriteAtomic("document_chunks", rebucketed, Seq("doc_bucket"))
+    other.setTableProp("document_chunks", "buckets", "4")
+    assert(store.getChunks(id1).count() == 3,
+      "the serving store must prune with the new bucket count at once")
+    assert(bare() == 3, "ChunkBucketPruning must inject the new bucket count at once")
   }
 
   test("ChunkBucketPruning injects the bucket predicate for bare document_id filters") {

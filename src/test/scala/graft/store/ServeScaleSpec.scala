@@ -17,9 +17,10 @@ import graft.serve.DocumentStore
   *  1. a `getDocument` point lookup PLANS a handful of files, not one
   *     task per file of the table (footer-band pruning via the stats
   *     manifest — no live footer opens on the hot path);
-  *  2. N lookups inside the TTL window perform ONE real directory
-  *     listing (the listing cache amortizes the O(#files) driver
-  *     listing, which at ~800k files would otherwise BE the latency);
+  *  2. N lookups of an unchanged table perform NO directory listing
+  *     (the table snapshot holds the file list while the version token
+  *     is unchanged; at ~800k files a per-lookup listing would BE the
+  *     latency);
   *  3. the N-lookup wall time is bounded — the end-to-end latency an
   *     operator would measure, covering the driver-side manifest reads
   *     and the 1-2-task Spark jobs.
@@ -50,48 +51,45 @@ class ServeScaleSpec extends AnyFunSuite with SharedSpark {
 
     val ds = new DocumentStore(spark, ts,
       new ObjectStore(spark, s"$root/bucket"))
-    spark.conf.set("spark.graft.listingCacheTtlMs", "600000")
-    try {
-      // warm lookup pays the ONE real listing of the window
-      assert(ds.getDocument(777L).count() == 1)
-      val listingsBefore = ts.listingsPerformed.get()
-      val ids = Seq(3L, 123L, 999L, 4321L, 14350L, 23456L, 25000L, 34567L,
-        45678L, 49999L, 50001L, 56789L, 63210L, 67890L, 75757L, 78901L,
-        88888L, 89012L, 90123L, 99999L)
-      val t0 = System.nanoTime()
-      for (id <- ids) {
-        val doc = ds.getDocument(id)
-        val planned = doc.inputFiles.count(_.contains("/documents/"))
-        assert(planned >= 1 && planned <= 3,
-          s"id=$id must plan O(matched files) of $fileCount, planned $planned")
-        val row = doc.collect()
-        assert(row.length == 1 && row.head.getAs[Long]("id") == id)
-        assert(row.head.getAs[String]("filename") == s"doc$id.pdf")
-      }
-      val wallSec = (System.nanoTime() - t0) / 1e9
-      assert(ts.listingsPerformed.get() == listingsBefore,
-        "N in-TTL lookups must not re-list the table")
-      // generous CI bound; locally ~0.1-0.3 s per lookup. Without
-      // pruning each lookup would schedule ~5,000 tasks; without the
-      // cache each would pay an O(#files) listing — either blows this
-      assert(wallSec < 60.0,
-        f"${ids.size} point lookups took $wallSec%.1f s on a $fileCount-file table")
-      info(f"${ids.size} lookups in $wallSec%.2f s over $fileCount files " +
-        f"(${wallSec / ids.size}%.3f s/lookup)")
-      // the 404 shape: an id past every footer band must not fall back
-      // to a whole-table plan — a local empty relation plans NOTHING
-      // (r13; previously read(table).filter(false) listed all 5k files
-      // at action time to return zero rows)
-      val absent = ds.getDocument(nRows + 12345L)
-      assert(absent.count() == 0)
-      assert(absent.inputFiles.isEmpty,
-        "an absent-key lookup must plan zero files, not the table")
-      // keyset pagination rides the same machinery: a deep page plans
-      // only the files past its anchor
-      val page = ds.listDocumentsAfter(99000L, limit = 20)
-      assert(page.inputFiles.count(_.contains("/documents/")) <= 60,
-        "a deep keyset page must plan only the anchor's tail")
-      assert(page.collect().map(_.getAs[Long]("id")).toSeq == (99001L to 99020L))
-    } finally spark.conf.set("spark.graft.listingCacheTtlMs", "0")
+    // the warm lookup pays the one listing of this table version
+    assert(ds.getDocument(777L).count() == 1)
+    val listingsBefore = ts.listingsPerformed.get()
+    val ids = Seq(3L, 123L, 999L, 4321L, 14350L, 23456L, 25000L, 34567L,
+      45678L, 49999L, 50001L, 56789L, 63210L, 67890L, 75757L, 78901L,
+      88888L, 89012L, 90123L, 99999L)
+    val t0 = System.nanoTime()
+    for (id <- ids) {
+      val doc = ds.getDocument(id)
+      val planned = doc.inputFiles.count(_.contains("/documents/"))
+      assert(planned >= 1 && planned <= 3,
+        s"id=$id must plan O(matched files) of $fileCount, planned $planned")
+      val row = doc.collect()
+      assert(row.length == 1 && row.head.getAs[Long]("id") == id)
+      assert(row.head.getAs[String]("filename") == s"doc$id.pdf")
+    }
+    val wallSec = (System.nanoTime() - t0) / 1e9
+    assert(ts.listingsPerformed.get() == listingsBefore,
+      "N lookups of an unchanged table must not re-list it")
+    // generous CI bound; locally ~0.1-0.3 s per lookup. Without
+    // pruning each lookup would schedule ~5,000 tasks; without the
+    // snapshot each would pay an O(#files) listing — either blows this
+    assert(wallSec < 60.0,
+      f"${ids.size} point lookups took $wallSec%.1f s on a $fileCount-file table")
+    info(f"${ids.size} lookups in $wallSec%.2f s over $fileCount files " +
+      f"(${wallSec / ids.size}%.3f s/lookup)")
+    // the 404 shape: an id past every footer band must not fall back
+    // to a whole-table plan — a local empty relation plans NOTHING
+    // (r13; previously read(table).filter(false) listed all 5k files
+    // at action time to return zero rows)
+    val absent = ds.getDocument(nRows + 12345L)
+    assert(absent.count() == 0)
+    assert(absent.inputFiles.isEmpty,
+      "an absent-key lookup must plan zero files, not the table")
+    // keyset pagination rides the same machinery: a deep page plans
+    // only the files past its anchor
+    val page = ds.listDocumentsAfter(99000L, limit = 20)
+    assert(page.inputFiles.count(_.contains("/documents/")) <= 60,
+      "a deep keyset page must plan only the anchor's tail")
+    assert(page.collect().map(_.getAs[Long]("id")).toSeq == (99001L to 99020L))
   }
 }

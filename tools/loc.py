@@ -8,14 +8,18 @@ Counts every .scala file under src/main and src/test at <rev> (read with
 comment and blank, and prints the change per tree plus the files whose
 code changed most. A line with any code on it counts as code; a line
 holding only comment text (`//`, `/* */`, scaladoc) counts as comment, so
-deleting a comment never shows up as deleted code. Standard library only.
+deleting a comment never shows up as deleted code. Also prints the number
+of distinct `"spark.graft.*"` option keys read under src/main on each side,
+the option count a simplicity change reports. Standard library only.
 """
 import os
+import re
 import subprocess
 import sys
 
 TREES = ("src/main", "src/test")
 TOP = 10  # files listed under "largest changes"
+OPTION = re.compile(r'"(spark\.graft\.[A-Za-z0-9_.]+)"')
 
 
 def classify(text):
@@ -81,12 +85,14 @@ def git(*args):
 
 
 def at_rev(rev):
+    """path -> source text of every .scala file under TREES at `rev`."""
     names = git("ls-tree", "-r", "--name-only", rev, "--", *TREES).decode().split("\n")
-    return {p: classify(git("show", f"{rev}:{p}").decode("utf-8", "replace"))
+    return {p: git("show", f"{rev}:{p}").decode("utf-8", "replace")
             for p in names if p.endswith(".scala")}
 
 
 def in_tree():
+    """path -> source text of every .scala file under TREES in the working tree."""
     out = {}
     for tree in TREES:
         for d, _, files in os.walk(tree):
@@ -94,8 +100,14 @@ def in_tree():
                 if f.endswith(".scala"):
                     p = os.path.join(d, f)
                     with open(p, encoding="utf-8", errors="replace") as fh:
-                        out[p] = classify(fh.read())
+                        out[p] = fh.read()
     return out
+
+
+def options(sources):
+    """Distinct spark.graft.* keys named in src/main sources."""
+    return {k for p, text in sources.items() if p.startswith("src/main/")
+            for k in OPTION.findall(text)}
 
 
 def main():
@@ -103,7 +115,9 @@ def main():
         sys.exit(__doc__)
     rev = sys.argv[1]
     os.chdir(git("rev-parse", "--show-toplevel").decode().strip())
-    old, new = at_rev(rev), in_tree()
+    old_src, new_src = at_rev(rev), in_tree()
+    old = {p: classify(t) for p, t in old_src.items()}
+    new = {p: classify(t) for p, t in new_src.items()}
     print(f"scala lines, working tree vs {rev}")
     print(f"{'tree':<10} {'code':>16} {'delta':>7} {'comment':>16} {'delta':>7}")
     for tree in TREES:
@@ -124,6 +138,12 @@ def main():
         for dc, dm, p, gone, added in rows[:TOP]:
             tag = " (deleted)" if gone else " (new)" if added else ""
             print(f"  {dc:>+6} {dm:>+6}  {p}{tag}")
+    o0, o1 = options(old_src), options(new_src)
+    print(f"\nspark.graft.* options read under src/main: {len(o0)} -> {len(o1)}")
+    for k in sorted(o0 - o1):
+        print(f"  - {k}")
+    for k in sorted(o1 - o0):
+        print(f"  + {k}")
 
 
 if __name__ == "__main__":
