@@ -160,139 +160,181 @@ object GlobalOrder {
   }
 
   /** SERIAL-parity dense ids (`base+1, base+2, ...` in `sortCols` order)
-    * WITHOUT the one-task funnel of `row_number().over(Window.orderBy)`,
-    * and without the earlier `rdd.zipWithIndex` round-trip (which
-    * deserialized every row out of Tungsten format and back).
-    *
-    * Same two-level scheme as [[rankByHexKey]]/[[Packing.packSequences]],
-    * generalised to arbitrary orderable sort keys: bucket boundaries are
-    * SAMPLED ONCE to the driver (one slim per-partition-top-k pass over
-    * the sort keys, ≤16k rows collected) and embedded in the plan as
-    * LITERALS, so the per-row bucket assignment is pure literal
-    * comparison — deterministic on every evaluation by construction.
-    * A partition-id scheme (`spark_partition_id` over a range exchange)
-    * is NOT used deliberately: the tiny counts branch and the stamping
-    * branch are separate subtrees after optimization, and column pruning
-    * / AQE coalescing / round-robin upstream exchanges can each give the
-    * two branches different physical layouts — boundary literals cannot
-    * diverge. Then, as in the siblings:
-    *
-    *   1. one tiny aggregate (≤buckets rows, map-side combined) collects
-    *      per-bucket counts to the driver, which prefix-sums them into
-    *      per-bucket base offsets embedded as a literal map — a per-row
-    *      map lookup, no join, no exchange (exactly [[rankByHexKey]]'s
-    *      bases scheme);
-    *   2. a window partitioned BY BUCKET ranks within buckets in
-    *      parallel — id = base + bucketBase + rank.
-    *
-    * Small-frame fast path: when the boundary sample comes back short of
-    * its cap, the limit PROVED the whole frame fits in the sample — the
-    * counts job is skipped and the frame is stamped by one bounded
-    * single-partition window (the common streaming-trigger shape; saves
-    * one Spark job of per-batch fixed cost per id-stamped table). Frames
-    * with binary columns are excluded: the row bound is not a byte
-    * bound, and blob batches must not funnel through one window task.
-    *
-    * Bucket-order correctness does not depend on the sample or even on
-    * the driver's sort of it: bucket(key) = #{boundaries < key} is
-    * monotone in the engine's key order for ANY fixed boundary set, so a
-    * skewed sample only unbalances bucket sizes, never the id order.
-    * The standing sibling preconditions apply: `df` must evaluate
-    * deterministically (same multiset of rows on every evaluation — the
-    * ingest call sites pass checkpointed/persisted frames) and
-    * `sortCols` must be a unique key (duplicate keys would make the
-    * order among equals nondeterministic). Sort keys must be atomic
-    * orderable types (string/numeric/date/timestamp — what SERIAL-parity
-    * keys are in practice); a bucket of more than 2^31 rows fails loudly
-    * rather than silently wrapping `row_number`.
+    * WITHOUT the one-task funnel of `row_number().over(Window.orderBy)`:
+    * the count-of-one case of [[prefixSumsOf]] — a row's id is `base + 1`
+    * plus the number of rows before it. Same scale shape, preconditions
+    * and eager pre-passes (`onPhase`: `boundary_sample`, and
+    * `bucket_sums` off the small-frame fast path) as [[prefixSumsOf]].
     *
     * @param numPartitions fan-out of the within-bucket ranking (default
-    *   `spark.sql.shuffle.partitions`, capped at 256 like
-    *   [[rankByHexKey]] — boundary literals are compared per row, so the
-    *   chain is kept codegen-sized)
-    * @param onPhase timing hook for the two EAGER stages this call runs
-    *   (`boundary_sample`, `bucket_counts` — the latter absent on the
-    *   small-frame fast path); the returned frame's stamped window is the
-    *   remainder of the caller's wall clock. Bench wires this to its
-    *   phase registry so cross-round drift is stage-attributable.
+    *   `spark.sql.shuffle.partitions`, capped at 256)
     */
   def denseIds(df: DataFrame, sortCols: Seq[Column], idName: String,
                base: Long = 0L, numPartitions: Option[Int] = None,
                onPhase: (String, Double) => Unit = (_, _) => ()): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(sortCols.nonEmpty, "denseIds needs >=1 sort column")
     require(!df.columns.exists(_.equalsIgnoreCase(idName)),
       s"denseIds adds '$idName'; rename the existing column")
+    val rankC = Cols.fresh(df, "_go_rank")
+    prefixSumsOf(df, sortCols, Seq(rankC -> lit(1L)), numPartitions, onPhase)._1
+      .select(df.columns.map(col).toIndexedSeq :+
+        (lit(base) + col(rankC) + 1L).as(idName): _*)
+  }
+
+  /** Corpus-wide EXCLUSIVE prefix sums in a total order, without the
+    * one-task funnel: `outName` = Σ value over all rows STRICTLY before
+    * this row under `sortCols` — the running-total primitive behind
+    * byte-budget sharding ([[TarExport.writeTarShardsByBytes]]) and any
+    * "split where a cumulative quantity crosses a threshold" layout. The
+    * one-value case of [[prefixSumsOf]].
+    */
+  def prefixSums(df: DataFrame, sortCols: Seq[Column], valueCol: Column,
+                 outName: String, numPartitions: Option[Int] = None,
+                 onPhase: (String, Double) => Unit = (_, _) => ()): DataFrame =
+    prefixSumsOf(df, sortCols, Seq(outName -> valueCol), numPartitions, onPhase)._1
+
+  /** Several exclusive prefix sums in ONE pass: for every `(outName,
+    * value)`, `outName` = Σ value over all rows strictly before this row
+    * under `sortCols`; also returns each value's corpus total. Ingest
+    * stamps document ranks and chunk and chart id bases this way —
+    * `(1, nChunks, nCharts)` per document — so one pass assigns all three
+    * id ranges.
+    *
+    * Two-level scheme — one slim sample job, one sums job and ONE corpus
+    * exchange whatever the number of values:
+    *
+    *   1. bucket boundaries are SAMPLED ONCE to the driver (per-partition
+    *      top-k on a random key, ≤16k rows) and embedded in the plan as
+    *      LITERALS, so the per-row bucket assignment is pure literal
+    *      comparison — deterministic on every evaluation by construction.
+    *      (A partition-id scheme over a range exchange is NOT used: the
+    *      sums branch and the stamping branch are separate subtrees after
+    *      optimization, and pruning / AQE coalescing can lay them out
+    *      differently — boundary literals cannot diverge.)
+    *   2. one job folds every partition into a dense (bucket × value)
+    *      array of sums, tree-combined to the driver (no exchange, so one
+    *      job, where a grouped aggregate is two under adaptive
+    *      execution); the driver prefix-sums it into per-bucket bases
+    *      embedded as literal maps — a per-row map lookup, no join — and
+    *      the totals fall out of the same array;
+    *   3. a window partitioned BY BUCKET adds each value's within-bucket
+    *      running sum to its bucket base, in parallel.
+    *
+    * Bucket-order correctness does not depend on the sample: bucket(key)
+    * = #{boundaries < key} is monotone in the engine's key order for ANY
+    * fixed boundary set, so a skewed sample only unbalances bucket sizes.
+    *
+    * Small-frame fast path: a sample that comes back short of its cap
+    * PROVES it holds the whole frame, so the values are summed on the
+    * driver from the sample itself (no aggregate job) and the frame is
+    * stamped by one bounded window with no partition key. Frames with
+    * binary columns are excluded: the row bound is not a byte bound, and
+    * blob batches must not funnel through one window task.
+    *
+    * Preconditions: `df` must evaluate DETERMINISTICALLY (it is scanned
+    * more than once — pass checkpointed/persisted frames); `sortCols` a
+    * unique key over atomic orderable types (string/numeric/date/
+    * timestamp); values non-null — a null would silently vanish from
+    * every later prefix, so nulls are counted in the sums job (or in the
+    * driver-held sample) and refused loudly. Long arithmetic: at 100 TB
+    * of byte-sized values a total is ~2^47.
+    *
+    * @param numPartitions bucket fan-out (default
+    *   `spark.sql.shuffle.partitions`, capped at 256 — boundary literals
+    *   are compared per row, so the chain is kept codegen-sized)
+    * @param onPhase timing hook for the EAGER stages (`boundary_sample`,
+    *   and `bucket_sums` off the fast path); the stamping window is the
+    *   remainder of the caller's wall clock
+    */
+  def prefixSumsOf(df: DataFrame, sortCols: Seq[Column],
+                   values: Seq[(String, Column)],
+                   numPartitions: Option[Int] = None,
+                   onPhase: (String, Double) => Unit = (_, _) => ())
+      : (DataFrame, Seq[Long]) = {
+    import org.apache.spark.sql.expressions.Window
+    require(sortCols.nonEmpty, "prefixSums needs >=1 sort column")
+    require(values.nonEmpty, "prefixSums needs >=1 value")
+    values.foreach { case (n, _) =>
+      require(!df.columns.exists(_.equalsIgnoreCase(n)),
+        s"prefixSums adds '$n'; rename the existing column")
+    }
     val bucketC = Cols.fresh(df, "_go_bucket")
-    val cntC = Cols.fresh(df, "_go_cnt")
+    val valCs = values.indices.map(i => Cols.fresh(df, s"_go_val$i"))
     val nB = numPartitions.getOrElse(
       df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200").toInt)
       .max(1).min(256)
+    val withVals = valCs.zip(values).foldLeft(df) { case (acc, (c, (_, v))) =>
+      acc.withColumn(c, v.cast("long"))
+    }
+    def refuseNulls(n: Long, i: Int): Unit =
+      require(n == 0L, s"prefixSums: $n row(s) carry a null '${values(i)._1}' " +
+        "value — a null value would silently vanish from every later prefix")
+    def exclusive(c: String, w: org.apache.spark.sql.expressions.WindowSpec) =
+      coalesce(sum(c).over(w.rowsBetween(Window.unboundedPreceding, -1)), lit(0L))
+    def stamped(from: DataFrame, w: org.apache.spark.sql.expressions.WindowSpec,
+                bases: Int => Column): DataFrame =
+      from.select(df.columns.map(col).toIndexedSeq ++ values.indices.map(i =>
+        (bases(i) + exclusive(valCs(i), w)).as(values(i)._1)): _*)
 
     // ---- boundary sample: per-partition top-k on a random key, merged
     // on the driver — one slim scan, O(sample) driver memory, no count()
     // pre-pass. rand() is evaluated exactly once (collected), so its
-    // nondeterminism never reaches the bucket assignment.
+    // nondeterminism never reaches the bucket assignment. The values ride
+    // along: on the fast path they ARE the whole frame's values
     val rC = Cols.fresh(df, "_go_r")
     val sampleN = math.max(nB * 64, 1024)
     val tSample = System.nanoTime()
-    val sample = df.select(sortCols: _*).withColumn(rC, rand(42))
+    val sample = withVals.select(sortCols ++ valCs.map(col): _*)
+      .withColumn(rC, rand(42))
       .orderBy(col(rC)).limit(sampleN).drop(rC).collect()
     onPhase("boundary_sample", (System.nanoTime() - tSample) / 1e9)
+    val k = sortCols.length
 
-    // ---- small-frame fast path: a short sample PROVES the whole frame
-    // fits in it (limit returned everything), so the bucket machinery is
-    // pure overhead — skip the counts job and stamp with one bounded
-    // single-partition window (≤ sampleN-1 rows, a constant partition
-    // key so WindowExec doesn't log the corpus-funnel warning). This is
-    // the common shape of a STREAMING trigger: per-batch fixed cost
-    // drops by one Spark job per id-stamped table. Gated off for frames
-    // carrying binary columns: the short sample bounds ROWS, not bytes,
-    // and a single window task must not become the funnel for a batch of
-    // multi-MB blobs (chart PNGs) — those keep the bucketed path.
+    // ---- small-frame fast path: the short sample is the whole frame.
+    // The window has no partition key: one bounded task (< sampleN rows),
+    // which WindowExec logs as an unpartitioned window
     if (sample.length < sampleN && !hasBinaryColumn(df.schema)) {
-      val wSmall = Window.partitionBy(lit(0)).orderBy(sortCols: _*)
-      return df
-        .withColumn(idName, lit(base) + row_number().over(wSmall).cast("long"))
-        .select(df.columns.map(col).toIndexedSeq :+ col(idName): _*)
+      val totals = values.indices.map { i =>
+        refuseNulls(sample.count(_.isNullAt(k + i)).toLong, i)
+        sample.iterator.map(_.getLong(k + i)).sum
+      }
+      return (stamped(withVals, Window.orderBy(sortCols: _*), _ => lit(0L)), totals)
     }
 
-    val marked = df.withColumn(bucketC, bucketExpr(sample, sortCols, nB))
-
-    // ≤nB rows to the driver; prefix-sum into per-bucket base offsets
-    // embedded as a literal map (rankByHexKey's bases scheme) — the
-    // stamping pass is then a pure map lookup: no join, no broadcast
-    // exchange, no prefix-sum window task
-    val tCounts = System.nanoTime()
-    val counts = marked.groupBy(bucketC).agg(count(lit(1)).as(cntC))
-      .collect().map { r =>
-        val c = r.getLong(1)
-        require(c <= Int.MaxValue.toLong,
-          s"denseIds: a bucket holds $c rows, past row_number's 2^31 " +
-            "space; raise numPartitions or re-balance the sort keys")
-        r.getInt(0) -> c
-      }.toMap
-    onPhase("bucket_counts", (System.nanoTime() - tCounts) / 1e9)
-    var acc = 0L
-    val bases: Map[Int, Long] = counts.keys.toSeq.sorted.map { b =>
-      val e = b -> acc
-      acc += counts(b)
-      e
-    }.toMap
-    val wRank = Window.partitionBy(bucketC).orderBy(sortCols: _*)
-    marked
-      .withColumn(idName,
-        lit(base) + element_at(typedLit(bases), col(bucketC)) +
-          row_number().over(wRank).cast("long"))
-      .select(df.columns.map(col).toIndexedSeq :+ col(idName): _*)
+    val marked = withVals.withColumn(bucketC, bucketExpr(sample, sortCols, nB))
+    // per-bucket sums as ONE job with no exchange: each partition folds
+    // its rows into a dense (bucket × value) array of sums and null
+    // counts, tree-combined to the driver. Nulls are counted because
+    // sum() would skip them silently, corrupting every later prefix
+    val nV = values.length
+    val tSums = System.nanoTime()
+    val acc = marked.select(col(bucketC) +: valCs.map(col): _*)
+      .queryExecution.toRdd
+      .treeAggregate(new Array[Long](nB * 2 * nV))((a, r) => {
+        val at = r.getInt(0) * 2 * nV
+        var i = 0
+        while (i < nV) {
+          if (r.isNullAt(1 + i)) a(at + nV + i) += 1 else a(at + i) += r.getLong(1 + i)
+          i += 1
+        }
+        a
+      }, (a, b) => { var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a })
+    onPhase("bucket_sums", (System.nanoTime() - tSums) / 1e9)
+    values.indices.foreach(i =>
+      refuseNulls((0 until nB).map(b => acc(b * 2 * nV + nV + i)).sum, i))
+    val sums = (0 until nB).map(b => acc.slice(b * 2 * nV, b * 2 * nV + nV))
+    val bases = values.indices.map(i => sums.scanLeft(0L)(_ + _(i)).take(nB))
+    (stamped(marked, Window.partitionBy(bucketC).orderBy(sortCols: _*),
+      i => element_at(typedLit(bases(i).zipWithIndex.map(_.swap).toMap), col(bucketC))),
+      values.indices.map(i => sums.map(_(i)).sum))
   }
 
-  /** Bucket assignment from a driver-held boundary sample:
+  /** Bucket assignment from a driver-held boundary sample (whose first
+    * `sortCols.length` fields are the sort keys):
     * bucket = #{boundaries < key}, a flat sum of literal lexicographic
-    * comparisons (null keys sort first, as in the engine's ordering).
-    * Shared by [[denseIds]] and [[prefixSums]] — for ANY fixed boundary
-    * set the count is monotone in the engine's key order, so a skewed
-    * sample only unbalances bucket sizes, never the order.
+    * comparisons (null keys sort first, as in the engine's ordering). For
+    * ANY fixed boundary set the count is monotone in the engine's key
+    * order, so a skewed sample only unbalances bucket sizes, never the
+    * order.
     */
   private def bucketExpr(sample: Array[org.apache.spark.sql.Row],
                          sortCols: Seq[Column], nB: Int): Column = {
@@ -313,91 +355,8 @@ object GlobalOrder {
     }
   }
 
-  /** Corpus-wide EXCLUSIVE prefix sums in a total order, without the
-    * one-task funnel: `outName` = Σ value over all rows STRICTLY before
-    * this row under `sortCols` — the running-total primitive behind
-    * byte-budget sharding ([[TarExport.writeTarShardsByBytes]]) and any
-    * "split where a cumulative quantity crosses a threshold" layout.
-    *
-    * Same two-level scheme as [[denseIds]] (boundary sample embedded as
-    * literals → per-bucket SUM to the driver → literal base map + a
-    * within-bucket running-sum window), so the same scale shape: one
-    * slim sample pass, one tiny aggregate (≤buckets rows), ONE corpus
-    * exchange (hash by bucket for the window). Long arithmetic — at
-    * 100 TB of byte-sized values the total is ~2^47, far inside Long.
-    *
-    * Same preconditions as [[denseIds]]: deterministic `df` (scanned
-    * more than once), `sortCols` a unique key over atomic orderable
-    * types, and `valueCol` non-null (a null value poisons every later
-    * prefix — refused loudly via the per-bucket sum's null check).
-    * Small frames take the same proven-bounded single-window fast path
-    * (gated off for binary-bearing frames — a blob batch must not
-    * funnel through one window task).
-    */
-  def prefixSums(df: DataFrame, sortCols: Seq[Column], valueCol: Column,
-                 outName: String, numPartitions: Option[Int] = None,
-                 onPhase: (String, Double) => Unit = (_, _) => ()): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(sortCols.nonEmpty, "prefixSums needs >=1 sort column")
-    require(!df.columns.exists(_.equalsIgnoreCase(outName)),
-      s"prefixSums adds '$outName'; rename the existing column")
-    val bucketC = Cols.fresh(df, "_go_bucket")
-    val valC = Cols.fresh(df, "_go_val")
-    val nB = numPartitions.getOrElse(
-      df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200").toInt)
-      .max(1).min(256)
-    val withVal = df.withColumn(valC, valueCol.cast("long"))
-
-    val rC = Cols.fresh(df, "_go_r")
-    val sampleN = math.max(nB * 64, 1024)
-    val tSample = System.nanoTime()
-    val sample = df.select(sortCols: _*).withColumn(rC, rand(42))
-      .orderBy(col(rC)).limit(sampleN).drop(rC).collect()
-    onPhase("boundary_sample", (System.nanoTime() - tSample) / 1e9)
-
-    def exclusive(w: org.apache.spark.sql.expressions.WindowSpec) =
-      coalesce(sum(valC).over(w.rowsBetween(Window.unboundedPreceding, -1)),
-        lit(0L))
-
-    if (sample.length < sampleN && !hasBinaryColumn(df.schema)) {
-      require(withVal.filter(col(valC).isNull).limit(1).isEmpty,
-        "prefixSums: valueCol is null on some row — a null value would " +
-          "silently vanish from every later prefix")
-      val wSmall = Window.partitionBy(lit(0)).orderBy(sortCols: _*)
-      return withVal
-        .withColumn(outName, exclusive(wSmall))
-        .select(df.columns.map(col).toIndexedSeq :+ col(outName): _*)
-    }
-
-    val marked = withVal.withColumn(bucketC, bucketExpr(sample, sortCols, nB))
-    val nullC = Cols.fresh(df, "_go_nulls")
-    val tCounts = System.nanoTime()
-    // nulls are counted in the SAME tiny aggregate — sum() skips them
-    // silently, and a skipped value would corrupt every later prefix
-    val sums = marked.groupBy(bucketC)
-      .agg(sum(valC).as(valC), count(when(col(valC).isNull, 1)).as(nullC))
-      .collect().map { r =>
-        require(r.getLong(2) == 0L,
-          s"prefixSums: ${r.getLong(2)} row(s) carry a null valueCol — " +
-            "a null value would silently vanish from every later prefix")
-        r.getInt(0) -> r.getLong(1)
-      }.toMap
-    onPhase("bucket_sums", (System.nanoTime() - tCounts) / 1e9)
-    var acc = 0L
-    val bases: Map[Int, Long] = sums.keys.toSeq.sorted.map { b =>
-      val e = b -> acc
-      acc += sums(b)
-      e
-    }.toMap
-    val wRank = Window.partitionBy(bucketC).orderBy(sortCols: _*)
-    marked
-      .withColumn(outName,
-        element_at(typedLit(bases), col(bucketC)) + exclusive(wRank))
-      .select(df.columns.map(col).toIndexedSeq :+ col(outName): _*)
-  }
-
   /** True when the schema carries a binary column anywhere (top level or
-    * nested) — the payload-weight signal the denseIds fast path gates on.
+    * nested) — the payload-weight signal the small-frame fast path gates on.
     */
   private def hasBinaryColumn(dt: org.apache.spark.sql.types.DataType): Boolean = {
     import org.apache.spark.sql.types._

@@ -146,20 +146,11 @@ object Packing {
     // at scale, one extra scan-and-split beats parking the whole
     // tokenized corpus in executor storage (which spills, and which the
     // unmanaged path can only release on driver GC).
-    val sc = df.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    val slim = df
+    val (slim, release) = LocalCheckpoint(df
       .select(col(idCol).cast("long").as("id"), col(textCol))
       .filter(col("id").isNotNull && col(textCol).isNotNull)
       .select(col("id"),
-        size(split(col(textCol), " ")).cast("long").as("tok"))
-      .localCheckpoint()
-    // the blocks persisted by THIS eager checkpoint (diffed, because
-    // Dataset.localCheckpoint does not hand back its RDD); assumes no
-    // concurrent persist raced the build — engine-internal ops don't
-    val mine = sc.getPersistentRDDs.keySet.diff(before)
-    val release = () => mine.foreach(id =>
-      sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
+        size(split(col(textCol), " ")).cast("long").as("tok")))
 
     val placed = packSequences(slim, "id", "tok", seqLen)
     val toks = df

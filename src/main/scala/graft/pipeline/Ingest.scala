@@ -33,14 +33,16 @@ import graft.store.{ObjectStore, TableStore}
   * a different checkpoint is ignored: the fresh stream REPLAYS, which is
   * the safe direction (at-least-once; `dedupByContent` de-duplicates).
   *
-  * Scale design: parse/chunk/NER/render are all per-document computations
-  * performed inside `mapPartitions`/`flatMap`, so the heavy path has ZERO
-  * shuffles — chunk ordinals and per-type chart counters are computed
-  * inside the per-document iteration exactly like the reference's
-  * `enumerate` (repository.py:28) and counters (pdf_parser.py:137-138).
-  * The only shuffles in the whole job are the bucket exchanges of the
-  * dense-id assignment (GlobalOrder.denseIds — literal-boundary buckets
-  * ranked by per-bucket windows, never a single-partition window).
+  * Scale design: parse/chunk/NER/render are one per-document map over the
+  * scan's file partitions, so the heavy path has ZERO shuffles — chunk
+  * ordinals and per-type chart counters are computed inside the
+  * per-document iteration exactly like the reference's `enumerate`
+  * (repository.py:28) and counters (pdf_parser.py:137-138), and every
+  * chart renders exactly once. The only shuffle in the whole job is the
+  * bucket exchange of the one id pass (GlobalOrder.prefixSumsOf over the
+  * documents with values (1, chunks, charts) — literal-boundary buckets
+  * summed by per-bucket windows, never a single-partition window), which
+  * yields the document ids and the chunk and chart id bases together.
   */
 final case class ProcessingConfig(
     chunker: ChunkerConfig = ChunkerConfig(),
@@ -168,7 +170,17 @@ object IngestPipeline {
   */
 final case class ChunkData(chunkIndex: Int, text: String,
                            tokenCount: Int, entities: Entities)
-final case class DocWithChunks(doc: ParsedDoc, chunks: Seq[ChunkData])
+/** One rendered chart of a document (E5/E6): its per-type counter, info
+  * fields and PNG bytes.
+  */
+final case class ChartData(chartType: String, typeIndex: Int, level: Int,
+                           caption: String, png: Array[Byte])
+/** Everything the parse pass computes for one document: chunks sorted by
+  * `chunkIndex`, charts by `(chartType, typeIndex)` — the orders their
+  * ids are dense in.
+  */
+final case class DocWithChunks(doc: ParsedDoc, chunks: Seq[ChunkData],
+                               charts: Seq[ChartData])
 
 final class IngestPipeline(
     spark: SparkSession,
@@ -481,44 +493,52 @@ final class IngestPipeline(
         existing
       }
 
-    // E1 -> E2 -> E4/E7, all inside one per-document flatMap.
-    // localCheckpoint (eager) truncates the lineage: the downstream appends
-    // and stats must never re-evaluate the dedup anti-join against the
-    // documents table, which this very batch is about to append to — a lazy
-    // plan would re-read the table post-append and drop the batch's own
-    // rows from later stages.
+    // E1 -> E2 -> E4/E7 -> E5/E6, all inside one per-document map: every
+    // chart renders here, once, spread over the scan's file partitions.
+    // The eager checkpoint truncates the lineage: the downstream appends
+    // must never re-evaluate the dedup anti-join against the documents
+    // table, which this very batch is about to append to — a lazy plan
+    // would re-read the table post-append and drop the batch's own rows
+    // from later stages.
     val tParse = System.nanoTime()
-    val parsed = Parse.parseDocuments(deduped, mkParser)
-      .map { doc =>
+    val (parsed, releaseParsed) = graft.ops.LocalCheckpoint(
+      Parse.parseDocuments(deduped, mkParser).map { doc =>
         val chunks = Chunker.chunk(doc, chunkerCfg).map { c: TextChunk =>
           ChunkData(c.chunkIndex, c.serialized, c.tokenCount,
             Ner.extract(c.serialized)) // NER on enriched text (pdf_parser.py:222)
-        }
-        DocWithChunks(doc, chunks)
-      }
-      .localCheckpoint()
+        }.sortBy(_.chunkIndex)
+        // per-element failure isolation lives in extractCharts: a chart
+        // that fails to render is dropped, and ids stay dense over the rest
+        val charts = Images.extractCharts(doc, imageScale)
+          .map(p => ChartData(p.chartType, p.typeIndex, p.level, p.caption, p.png))
+          .sortBy(c => (c.chartType, c.typeIndex))
+        DocWithChunks(doc, chunks, charts)
+      })
     onPhase("parse_chunk_ner", (System.nanoTime() - tParse) / 1e9)
 
     val tWrites = System.nanoTime()
     val toUnpersist = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     try {
-      // ---- document ids (SERIAL replacement, SURVEY §7.4.2). Dense
-      // parity ids come from the literal-boundary bucket scheme
-      // (GlobalOrder.denseIds) — same ids as a global row_number (paths
-      // are unique), without funnelling the batch through one task.
-      // Materialized HERE (doc + chunk counts in one cache-filling job)
-      // so the id assignment's cost lands in its own phase instead of
-      // inside whichever table write happens to evaluate the cache first;
-      // every downstream append reads the cached blocks.
-      val (docsWithId, docStats) = timed("ids_docs") {
-        val df = graft.ops.GlobalOrder.denseIds(parsed.toDF(),
-          Seq(col("doc.path")), "id", tables.maxId("documents", "id"))
-        df.persist()
-        toUnpersist += df
-        val stats = df
-          .agg(count(lit(1)), coalesce(sum(size(col("chunks"))), lit(0L)))
-          .head()
-        (df, stats)
+      // ---- every id of the batch from ONE prefix-sum pass over the
+      // documents in path order (SERIAL replacement, SURVEY §7.4.2):
+      // `_rank` counts the documents before this one, `_chunk_base` and
+      // `_chart_base` their chunks and charts. Then
+      //   document id = maxId(documents) + rank + 1
+      //   chunk id    = maxId(document_chunks) + chunkBase + pos + 1
+      //   chart id    = maxId(chart_data) + chartBase + pos + 1
+      // where pos is the chunk's (chart's) place in its sorted array —
+      // the same ids as global row_numbers over (path), (document_id,
+      // chunk_index) and (document_id, chart_type, type_index), without
+      // funnelling the batch through one task. The totals are the stats.
+      // All three bases are read here, before any write or delete.
+      val (docsWithId, totals) = timed("ids_docs") {
+        val (stamped, sums) = graft.ops.GlobalOrder.prefixSumsOf(parsed.toDF(),
+          Seq(col("doc.path")), Seq("_rank" -> lit(1L),
+            "_chunk_base" -> size(col("chunks")), "_chart_base" -> size(col("charts"))))
+        val withId = stamped.withColumn("id",
+          lit(tables.maxId("documents", "id")) + col("_rank") + 1L).persist()
+        toUnpersist += withId
+        (withId, sums)
       }
 
       // ---- documents table (schema.py:26-44; metainfo shape main.py:72-76)
@@ -536,58 +556,43 @@ final class IngestPipeline(
         nowLit.as("created_at"),
         nowLit.as("updated_at"))
 
-      // ---- document_chunks table (schema.py:11-24); dense chunk ids use
-      // the same funnel-free scheme, ordered by the unique
-      // (document_id, chunk_index) key. The eager maxId footer pass runs
-      // inside the chunk-id phase so its cost is attributed, not smeared
-      // into a neighboring write.
+      // ---- document_chunks table (schema.py:11-24), one task per bucket
+      // so an append writes one file per bucket dir, not one per
+      // (stamping partition, bucket)
       val chunkRows = timed("ids_chunks") {
         val baseChunkId = tables.maxId("document_chunks", "id")
-        val chunkCols = docsWithId
-          .select(col("id").as("document_id"), explode(col("chunks")).as("c"))
+        docsWithId
+          .select(col("id").as("document_id"), col("_chunk_base"),
+            posexplode(col("chunks")).as(Seq("pos", "c")))
           .select(
+            (lit(baseChunkId) + col("_chunk_base") + col("pos") + 1L).as("id"),
             col("document_id"),
             col("c.chunkIndex").as("chunk_index"),
             col("c.text").as("text_content"),
             to_json(col("c.entities")).as("entities"),
             to_json(struct(col("c.tokenCount").as("token_count"))).as("chunk_metadata"),
             nowLit.as("created_at"))
-        graft.ops.GlobalOrder.denseIds(chunkCols,
-          Seq(col("document_id"), col("chunk_index")), "id", baseChunkId)
-          .select("id", "document_id", "chunk_index", "text_content",
-            "entities", "chunk_metadata", "created_at")
           .withColumn("doc_bucket",
             IngestPipeline.chunkBucket(col("document_id"), effectiveChunkBuckets))
+          .repartition(col("doc_bucket"))
       }
 
-      // ---- chart payloads (E5/E6) — per-doc counters, zero shuffle.
-      // Materialized (persist + count) in its own phase: chart ids + PNG
-      // rendering would otherwise bill to the blob-put that evaluates
-      // the cache; the count doubles as the stats figure.
-      val (chartsWithId, chartCount) = timed("ids_charts") {
-        // checkpoint BEFORE denseIds: the binary png column routes
-        // denseIds down its 3-pass general path (boundary sample, bucket
-        // counts, stamp), and each pass would re-run this flatMap — i.e.
-        // re-render every chart PNG three times. One eager render into
-        // cached blocks; the id passes then read bytes, not ImageIO.
-        val chartPayloads = docsWithId
-          .select(col("id").as("document_id"), col("doc"))
-          .as[(Long, ParsedDoc)]
-          .flatMap { case (docId, doc) =>
-            Images.extractCharts(doc, imageScale).map(p =>
-              (docId, p.chartType, p.typeIndex, p.level, p.caption, p.png))
-          }
-          .toDF("document_id", "chart_type", "type_index", "level", "caption", "png")
-          .localCheckpoint()
-        toUnpersist += chartPayloads
-        val df = graft.ops.GlobalOrder.denseIds(chartPayloads,
-          Seq(col("document_id"), col("chart_type"), col("type_index")),
-          "id", tables.maxId("chart_data", "id"))
+      // ---- chart payloads (E5/E6), rendered in the parse pass
+      val chartsWithId = timed("ids_charts") {
+        val baseChartId = tables.maxId("chart_data", "id")
+        docsWithId
+          .select(col("id").as("document_id"), col("_chart_base"),
+            posexplode(col("charts")).as(Seq("pos", "c")))
+          .select(
+            (lit(baseChartId) + col("_chart_base") + col("pos") + 1L).as("id"),
+            col("document_id"),
+            col("c.chartType").as("chart_type"),
+            col("c.typeIndex").as("type_index"),
+            col("c.level").as("level"),
+            col("c.caption").as("caption"),
+            col("c.png").as("png"))
           .withColumn("image_path",
             format_string("documents/%d/charts/%d.png", col("document_id"), col("id")))
-        df.persist()
-        toUnpersist += df
-        (df, df.count())
       }
 
       // info JSON (pdf_parser.py:152-160,172-180)
@@ -716,23 +721,19 @@ final class IngestPipeline(
         tables.append("minhash_bands", newBands)
       }
 
-      // stats came from the PERSISTED upstream frames at materialization
-      // time (ids_docs/ids_charts) — no extra jobs here. The aggregate
-      // ids_writes_stats phase stays for cross-round continuity: its
-      // value should ≈ the sum of the sub-phases, and the residual is
-      // unattributed driver time.
-      val stats = IngestStats(
-        documents = docStats.getLong(0),
-        chunks = docStats.getLong(1),
-        charts = chartCount)
+      // stats are the id pass's totals — no extra jobs here. The
+      // aggregate ids_writes_stats phase stays for cross-round
+      // continuity: its value should ≈ the sum of the sub-phases, and the
+      // residual is unattributed driver time.
+      val stats = IngestStats(documents = totals(0), chunks = totals(1), charts = totals(2))
       onPhase("ids_writes_stats", (System.nanoTime() - tWrites) / 1e9)
       stats
     } finally {
-      // release everything cached for this batch — a long-running stream
-      // calls ingestBinary every trigger and leaked blocks (especially
-      // chartsWithId's PNG payloads) would fill executor storage
+      // release everything stored for this batch — a long-running stream
+      // calls ingestBinary every trigger and leaked blocks (especially the
+      // PNG payloads) would fill executor storage
       toUnpersist.foreach(_.unpersist())
-      parsed.unpersist() // drops the checkpointed blocks
+      releaseParsed()
     }
   }
 }

@@ -434,7 +434,7 @@ object JoinAggWindowProbes {
       "w5_dense_ids",
       "SELECT l_orderkey, l_linenumber, row_number() OVER (ORDER BY l_orderkey, l_linenumber) AS rid FROM lineitem ORDER BY rid"
     ) { (s, d) =>
-      // phases: boundary_sample + bucket_counts (the eager pre-passes);
+      // phases: boundary_sample + bucket_sums (the eager pre-passes);
       // the un-attributed remainder is the stamped-window job itself
       graft.ops.GlobalOrder.denseIds(
         t(s, d, "lineitem").select("l_orderkey", "l_linenumber"),

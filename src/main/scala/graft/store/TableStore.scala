@@ -468,7 +468,7 @@ object TableStore {
   } catch { case scala.util.control.NonFatal(_) => Map.empty }
 
   /** The version token: one small hidden file that every TableStore
-    * mutation rewrites in place after its data is in place. It reads
+    * mutation renames a fresh copy over once its data is in place. It reads
     * `<schema epoch> <version>`, both random: the epoch carries over
     * across mutations that cannot change the inferred schema (appends
     * validated against a known schema, props, the stats manifest) and is
@@ -481,7 +481,7 @@ object TableStore {
 
   /** The table's token; None when it has none (written before tokens
     * existed, or by something other than TableStore) or when the read
-    * raced an in-place rewrite — an untracked read, never reused.
+    * failed — an untracked read, never reused.
     */
   private[store] def readToken(dir: Path,
                                conf: org.apache.hadoop.conf.Configuration): Option[String] =
@@ -1958,9 +1958,9 @@ final class TableStore(spark: SparkSession, root: String) {
     // carry the swap-runner's OWN lease into the staged dir (a foreign
     // one was refused above) so writer protection is continuous across
     // the swap instead of lapsing until the holder's next renewal —
-    // crc-free like every lease write (see writeLeaseRecordRaw)
+    // crc-free like every lease write (see writeChecksumFree)
     Sidecar.read(leasePath(table), spark.sparkContext.hadoopConfiguration)
-      .foreach(t => writeLeaseRecordRaw(new Path(tmp, WriterLease), t))
+      .foreach(t => writeChecksumFree(new Path(tmp, WriterLease), t))
     // staged/kept collision guard: if the staged write produced a path a
     // kept rel would later be renamed onto (e.g. a rendering-class bug
     // mapping an affected partition to the wrong directory name), the
@@ -2557,14 +2557,14 @@ final class TableStore(spark: SparkSession, root: String) {
     val tmp = new Path(active.getParent,
       s".lease-renew-${System.nanoTime()}-${writerId.take(8)}")
     val wrote =
-      try { writeLeaseRecordRaw(tmp, content); true }
+      try { writeChecksumFree(tmp, content); true }
       catch { case _: java.io.IOException => false }
     // a checksum sidecar left at the DESTINATION by an older
     // fs.create-written record would mismatch the nio-renamed bytes and
     // fail every later Hadoop read with a ChecksumException — drop it
     // first (readers between the drop and the rename see the old record
     // un-verified, which still parses)
-    dropLeaseCrcSidecar(active)
+    dropCrcSidecar(active)
     val replaced = wrote && renameReplace(tmp, active)
     if (wrote && !replaced) {
       try fs.delete(tmp, false) catch { case _: java.io.IOException => () }
@@ -2584,35 +2584,35 @@ final class TableStore(spark: SparkSession, root: String) {
     } else false
   }
 
-  /** Write a lease record CRC-SIDECAR-FREE. Lease paths are the one
-    * place this store mutates files with RAW renames (nio ATOMIC_MOVE —
-    * the only atomic replace the local filesystem offers), and a raw
-    * rename moves the data file but not Hadoop's `.name.crc` checksum
-    * sidecar: a sidecar surviving a rename-over would make every later
-    * read of the fresh record fail with a ChecksumException. So on the
-    * (checksummed) local filesystem lease records are written through
-    * nio — no sidecar is ever created — matching [[createLeaseExclusive]],
-    * and any sidecar left by an OLDER `fs.create`-written record is
+  /** Write a small file CRC-SIDECAR-FREE. Lease records, props and the
+    * version token are mutated with RAW renames (nio ATOMIC_MOVE — the
+    * only atomic replace the local filesystem offers), and a raw rename
+    * moves the data file but not Hadoop's `.name.crc` checksum sidecar:
+    * a sidecar surviving a rename-over would make every later read of
+    * the fresh bytes fail with a ChecksumException. So on the
+    * (checksummed) local filesystem these files are written through nio
+    * — no sidecar is ever created — matching [[createLeaseExclusive]],
+    * and any sidecar left by an OLDER `fs.create`-written file is
     * dropped. Non-local filesystems keep no client-side sidecar files
     * and go through the ordinary create.
     */
-  private def writeLeaseRecordRaw(at: Path, value: String): Unit =
+  private def writeChecksumFree(at: Path, value: String): Unit =
     fs match {
       case _: org.apache.hadoop.fs.LocalFileSystem |
            _: org.apache.hadoop.fs.RawLocalFileSystem =>
         val nio = java.nio.file.Paths.get(fs.makeQualified(at).toUri.getPath)
         java.nio.file.Files.createDirectories(nio.getParent)
         java.nio.file.Files.write(nio, value.getBytes("UTF-8"))
-        dropLeaseCrcSidecar(at)
+        dropCrcSidecar(at)
       case f =>
         val out = f.create(at, true)
         try out.write(value.getBytes("UTF-8")) finally out.close()
     }
 
-  /** Remove a stale Hadoop checksum sidecar next to a lease path (see
-    * [[writeLeaseRecordRaw]]); no-op on non-checksummed filesystems.
+  /** Remove a stale Hadoop checksum sidecar next to a path (see
+    * [[writeChecksumFree]]); no-op on non-checksummed filesystems.
     */
-  private def dropLeaseCrcSidecar(at: Path): Unit =
+  private def dropCrcSidecar(at: Path): Unit =
     fs match {
       case _: org.apache.hadoop.fs.LocalFileSystem |
            _: org.apache.hadoop.fs.RawLocalFileSystem =>
@@ -2938,9 +2938,27 @@ final class TableStore(spark: SparkSession, root: String) {
   def setTableProp(table: String, key: String, value: String): Unit =
     mutating(table, keepsSchema = true)(writePropFile(propPath(table, key), value))
 
+  /** Rewrite a prop or the version token so that a concurrent reader
+    * sees the old value or the new one, never an empty or torn file (an
+    * in-place truncate let a racing read see `""` — an untracked
+    * snapshot walk, or a `buckets` prop that fails `.toInt`). The value
+    * is written complete to a hidden temp sibling — `.`-prefixed, so
+    * [[TableStore.walk]] skips it and the `_graft_` prop listing never
+    * sees it — and renamed over the target. The temp is checksum-free
+    * and the target's old checksum is dropped BEFORE the rename, so no
+    * reader ever checks new bytes against an old checksum (a reader
+    * between the drop and the rename reads the old value unverified). A
+    * store without an atomic replace rewrites in place.
+    */
   private def writePropFile(at: Path, value: String): Unit = {
-    val out = fs.create(at, true)
-    try out.write(value.getBytes("UTF-8")) finally out.close()
+    val tmp = new Path(at.getParent, s".${at.getName}.${java.util.UUID.randomUUID()}.tmp")
+    writeChecksumFree(tmp, value)
+    dropCrcSidecar(at)
+    if (!renameReplace(tmp, at)) {
+      fs.delete(tmp, false)
+      val out = fs.create(at, true)
+      try out.write(value.getBytes("UTF-8")) finally out.close()
+    }
   }
 
   def getTableProp(table: String, key: String): Option[String] =

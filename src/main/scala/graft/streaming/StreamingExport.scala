@@ -59,7 +59,7 @@ object StreamingExport {
         if (!batch.isEmpty) {
           // the exporter scans its input more than once (denseIds'
           // determinism precondition) — pin the micro-batch first
-          val pinned = batch.localCheckpoint()
+          val (pinned, release) = graft.ops.LocalCheckpoint(batch)
           try {
             TarExport.writeTarShards(pinned, keyCol, orderCols, entries,
               samplesPerShard, s"$path/batch-$id", index).collect()
@@ -72,7 +72,7 @@ object StreamingExport {
             ExportIntegrity.writeManifestIncremental(spark, path,
               if (index) "batch-*/shard-*.tar*"
               else "batch-*/shard-*.tar").collect()
-          } finally pinned.unpersist()
+          } finally release()
           ()
         }
       }
