@@ -678,7 +678,8 @@ final class IngestPipeline(
       // (orphan blobs possible, dangling rows never — SURVEY §7.4.4).
       timed("write_documents") { tables.append("documents", docRowsFinal) }
       timed("write_chunks") {
-        tables.appendPartitioned("document_chunks", chunkRows, Seq("doc_bucket"))
+        tables.appendPartitioned("document_chunks", chunkRows, Seq("doc_bucket"),
+          rowCount = Some(totals(1)))
         // persist the bucketing convention WITH the table so any reader
         // (other sessions included) derives the right bucket predicate
         if (tables.exists("document_chunks"))

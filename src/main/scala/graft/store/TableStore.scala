@@ -806,12 +806,17 @@ final class TableStore(spark: SparkSession, root: String) {
     * partitioned by a bounded hash bucket of the parent key (SURVEY
     * §7.4.7) so point lookups become partition-pruned scans instead of
     * full-table reads.
+    *
+    * `rowCount`, when the caller already knows how many rows `df` holds,
+    * replaces the emptiness check: behind a repartition that check is a
+    * shuffle stage and a job of its own.
     */
   def appendPartitioned(table: String, df: DataFrame,
-                        partitionCols: Seq[String]): Unit = {
+                        partitionCols: Seq[String],
+                        rowCount: Option[Long] = None): Unit = {
     // appending nothing is a no-op — and an empty partitioned write would
     // create a file-less directory that poisons schema inference
-    if (df.isEmpty) return
+    if (rowCount.fold(df.isEmpty)(_ == 0L)) return
     val known = validateAppendSchema(table, df, partitionCols)
     // clear an empty-table schema marker (see overwriteAtomic) so the
     // layout stays uniformly partitioned; an unreadable (file-less) dir

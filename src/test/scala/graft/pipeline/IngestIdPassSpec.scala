@@ -97,7 +97,7 @@ class IngestIdPassSpec extends AnyFunSuite with SharedSpark {
     assert(perDoc("b.pdf")._1 > 0 && perDoc("b.pdf")._2 == 0L)
   }
 
-  test("an 80-document ingest call runs at most 12 Spark jobs") {
+  test("an 80-document ingest call runs at most 10 Spark jobs") {
     val dir = inbox((1 to 80).map(i =>
       f"doc$i%02d.pdf" -> s"Part $i:\n$text\nTABLE: t$i\n${if (i % 3 == 0) s"FIGURE: f$i\n" else ""}"): _*)
     val (_, _, warm) = pipeline(tmpDir("id-pass-warm"))
@@ -105,7 +105,7 @@ class IngestIdPassSpec extends AnyFunSuite with SharedSpark {
     val (_, _, pipe) = pipeline(tmpDir("id-pass-jobs"))
     val (stats, jobs) = SparkJobs.during(spark)(pipe.ingest(dir, now))
     assert(stats.documents == 80L)
-    assert(jobs <= 12, s"an 80-document ingest ran $jobs jobs")
+    assert(jobs <= 10, s"an 80-document ingest ran $jobs jobs")
   }
 
   private def storedRdds: Set[Int] = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet

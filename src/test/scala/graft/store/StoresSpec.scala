@@ -126,6 +126,20 @@ class StoresSpec extends AnyFunSuite with SharedSpark {
     assert(ts.read("t").count() == 1)
   }
 
+  test("a partitioned append told its row count runs no emptiness job") {
+    import spark.implicits._
+    val rows = Seq((1L, 0, "a"), (2L, 1, "b")).toDF("id", "bucket", "v").repartition(2)
+    def jobs(table: String, count: Option[Long]): Int = {
+      val ts = new TableStore(spark, tmpDir("tables"))
+      graft.SparkJobs.during(spark)(ts.appendPartitioned(table, rows, Seq("bucket"), count))._2
+    }
+    assert(jobs("t", Some(2L)) < jobs("t", None))
+    val ts = new TableStore(spark, tmpDir("tables"))
+    val (_, none) = graft.SparkJobs.during(spark)(
+      ts.appendPartitioned("t", rows.filter($"id" < 0), Seq("bucket"), Some(0L)))
+    assert(none == 0 && !ts.exists("t"))
+  }
+
   test("compact merges small files without changing content") {
     import spark.implicits._
     val root = tmpDir("tables")
